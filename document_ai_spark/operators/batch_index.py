@@ -15,17 +15,60 @@ directories under ``root/index/`` with the same discipline:
     different parameters raises instead of silently producing rows
     that never join old ones.
 
+An index's READ schema is the schema its first committed batch was
+written with, taken from that batch's parquet footer (no Spark job; the
+declared ``SCHEMA`` stands in while the index is empty). Every committed
+and staged batch is read with it, so opening an index runs no
+schema-inference job. The first batch is written as built: columns that
+carry the caller's ids keep the caller's type (numeric and string ids
+order differently in least/greatest pair output). Later batches are
+written in the read schema; a narrower numeric type is widened to it,
+any other difference is refused, because a cast could turn an id into
+NULL or wrap it.
+
+Each append lists the committed batches once (``_open_batch``) and
+hands the find logic the batches it may probe (``Batch.prior``),
+instead of re-listing ``index/`` per question.
+
 Re-running an already-committed batch id is idempotent: subclasses
 detect the existing ``_SUCCESS`` and replay against exactly the index
-state the batch saw the first time (``index_df(before_seq=...)``).
+state the batch saw the first time (``Batch.prior``, the batches
+committed strictly before its own seq).
 """
 from __future__ import annotations
 
 import json
 import os
-from typing import Dict, List
+from typing import Callable, Dict, List, NamedTuple, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, StructType
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _widens(src: DataType, dst: DataType) -> bool:
+    """``src`` casts to ``dst`` without loss: a wider integer type or
+    float to double, element-wise for arrays."""
+    if isinstance(src, ArrayType) and isinstance(dst, ArrayType):
+        return _widens(src.elementType, dst.elementType)
+    s, d = src.simpleString(), dst.simpleString()
+    if s in _INTEGRAL and d in _INTEGRAL:
+        return _INTEGRAL.index(s) <= _INTEGRAL.index(d)
+    return s == d or (s, d) == ("float", "double")
+
+
+class Batch(NamedTuple):
+    """One opened append: the batch's index rows (read back from staging,
+    or from the committed directory on replay) and the batches committed
+    strictly before its commit sequence, in commit order."""
+    rows: DataFrame
+    replay: bool
+    stage: str
+    final: str
+    prior: List[str]
 
 
 class AtomicBatchIndex:
@@ -62,32 +105,87 @@ class AtomicBatchIndex:
                 json.dump({**params, "format": self.FORMAT}, f)
             os.rename(tmp, meta_path)
         self.params = dict(params)
+        self._schema = None
+
+    # -- schema ----------------------------------------------------------
+
+    def row_schema(self) -> StructType:
+        """The read schema: the one the index's first committed batch was
+        written with, or the declared ``SCHEMA`` while none is."""
+        if self._schema is None:
+            committed = self._committed()
+            if not committed:
+                return StructType.fromDDL(self.SCHEMA)
+            import pyarrow.parquet as pq
+            d = os.path.join(self.index_dir, committed[0][0])
+            part = min(f for f in os.listdir(d)
+                       if f.startswith("part-") and f.endswith(".parquet"))
+            kv = pq.read_schema(os.path.join(d, part)).metadata
+            self._schema = StructType.fromJson(
+                json.loads(kv[_SPARK_SCHEMA_KEY]))
+        return self._schema
+
+    def _write_rows(self, rows: DataFrame, stage: str,
+                    first: bool) -> None:
+        """Write ``rows`` to ``stage``: the index's ``first`` batch as
+        built, later batches in the read schema (see module doc)."""
+        if first:
+            self._schema = rows.schema
+            rows.write.mode("overwrite").parquet(stage)
+            return
+        have = {f.name: f.dataType for f in rows.schema}
+        cols = []
+        for f in self.row_schema().fields:
+            t = have.get(f.name)
+            if t is None or t.simpleString() == f.dataType.simpleString():
+                cols.append(F.col(f.name))   # a missing column fails here
+            elif _widens(t, f.dataType):
+                cols.append(F.col(f.name).cast(f.dataType))
+            else:
+                raise ValueError(
+                    f"index at {self.root} stores {f.name} as "
+                    f"{f.dataType.simpleString()}; cannot append a batch "
+                    f"with {f.name} {t.simpleString()}")
+        rows.select(*cols).write.mode("overwrite").parquet(stage)
+
+    def _read(self, spark: SparkSession, paths: List[str]) -> DataFrame:
+        if not paths:
+            return spark.createDataFrame([], self.row_schema())
+        return spark.read.schema(self.row_schema()).parquet(*paths)
+
+    # -- committed listing -----------------------------------------------
 
     def _batch_seq(self, name: str) -> int:
         with open(os.path.join(self.index_dir, name, "_seq.json")) as f:
             return json.load(f)["seq"]
 
-    def committed_batches(self) -> List[str]:
-        """Committed batch names in COMMIT order."""
-        done = [d for d in os.listdir(self.index_dir)
+    def _committed(self) -> List[Tuple[str, int]]:
+        """(name, seq) of every committed batch in COMMIT order: one
+        directory listing and one ``_seq.json`` read per batch."""
+        done = [(d, self._batch_seq(d)) for d in os.listdir(self.index_dir)
                 if os.path.exists(os.path.join(self.index_dir, d,
                                                "_SUCCESS"))]
-        return sorted(done, key=self._batch_seq)
+        return sorted(done, key=lambda ds: ds[1])
+
+    def committed_batches(self) -> List[str]:
+        """Committed batch names in COMMIT order."""
+        return [d for d, _ in self._committed()]
 
     def index_df(self, spark: SparkSession,
                  before_seq: int = None) -> DataFrame:
         """Committed index rows; with ``before_seq``, only batches
         committed strictly earlier (what a replayed batch must see)."""
-        paths = [os.path.join(self.index_dir, d)
-                 for d in self.committed_batches()
-                 if before_seq is None or self._batch_seq(d) < before_seq]
-        if not paths:
-            return spark.createDataFrame([], self.SCHEMA)
-        return spark.read.parquet(*paths)
+        return self._read(spark, [
+            os.path.join(self.index_dir, d) for d, s in self._committed()
+            if before_seq is None or s < before_seq])
+
+    def prior_df(self, spark: SparkSession, batch: Batch) -> DataFrame:
+        """The index rows ``batch`` probes: its ``prior`` batches."""
+        return self._read(spark, [os.path.join(self.index_dir, d)
+                                  for d in batch.prior])
 
     def _next_seq(self) -> int:
-        return 1 + max((self._batch_seq(d)
-                        for d in self.committed_batches()), default=0)
+        return 1 + max((s for _, s in self._committed()), default=0)
 
     def _stage_paths(self, batch_id: str):
         return (os.path.join(self.staging_dir, batch_id),
@@ -108,40 +206,36 @@ class AtomicBatchIndex:
 
     # -- shared append skeleton ------------------------------------------
     # Every incremental index follows the same prologue/epilogue around
-    # its find/score logic; subclasses compose these three instead of
+    # its find/score logic; subclasses compose these two instead of
     # re-spelling the replay discipline (a fix to the shared protocol
     # lands once, not per index).
 
-    def _open_batch(self, spark: SparkSession, batch_id: str, build_fn):
+    def _open_batch(self, spark: SparkSession, batch_id: str,
+                    build_fn: Callable[[], DataFrame]) -> Batch:
         """Stage-or-replay prologue: materialize ``build_fn()`` (the
         batch's index rows) into staging — the parquet write IS the
         one-time materialization the find logic re-reads — or, on
         replay of a committed batch_id, reuse the committed files and
-        the seq they were stamped with. Returns
-        (rows_df, seq, replay, stage, final)."""
+        the seq they were stamped with."""
+        committed = self._committed()
+        seqs = dict(committed)
         stage, final = self._stage_paths(batch_id)
-        replay = self._is_committed(batch_id)
+        replay = batch_id in seqs
         if replay:
-            src, seq = final, self._batch_seq(batch_id)
+            src, seq = final, seqs[batch_id]
         else:
-            build_fn().write.mode("overwrite").parquet(stage)
+            self._write_rows(build_fn(), stage, first=not committed)
             src = stage
-            seq = self._next_seq()
+            seq = 1 + max(seqs.values(), default=0)
             self._stamp_seq(stage, seq)
-        return spark.read.parquet(src), seq, replay, stage, final
+        return Batch(self._read(spark, [src]), replay, stage, final,
+                     [d for d, s in committed if s < seq])
 
-    def _has_prior(self, seq: int) -> bool:
-        """Any batch committed strictly before ``seq`` (what a replayed
-        or fresh batch may probe)."""
-        return any(self._batch_seq(d) < seq
-                   for d in self.committed_batches())
-
-    def _close_batch(self, result_df: DataFrame, replay: bool,
-                     stage: str, final: str) -> DataFrame:
+    def _close_batch(self, result_df: DataFrame, batch: Batch) -> DataFrame:
         """Epilogue: materialize the result BEFORE the commit rename
         invalidates the staging path its lazy plan reads from, then
         commit (no-op on replay)."""
         out = result_df.localCheckpoint()
-        if not replay:
-            self._commit(stage, final)
+        if not batch.replay:
+            self._commit(batch.stage, batch.final)
         return out

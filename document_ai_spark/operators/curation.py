@@ -996,8 +996,9 @@ def bloom_decontaminate(docs: DataFrame, eval_docs: DataFrame,
 
 
 def bloom_contaminated(docs: DataFrame, eval_texts: DataFrame,
-                       bitmap, text_col: str = "text",
-                       k: int = BLOOM_K, m_bits: int = None) -> DataFrame:
+                       bitmap=None, text_col: str = "text",
+                       k: int = BLOOM_K, m_bits: int = None,
+                       words: list = None) -> DataFrame:
     """The reusable core of bloom_decontaminate: distinct doc_ids whose
     text appears verbatim in ``eval_texts`` (one `_etext` column),
     using a PREBUILT bitmap — for callers that amortize the bitmap
@@ -1009,7 +1010,20 @@ def bloom_contaminated(docs: DataFrame, eval_texts: DataFrame,
     ``m_bits`` too) — attached to the corpus via one broadcast cross
     join, so the corpus side still never shuffles before the confirm
     join. A Python list (legacy bloom_bitmap output) is still accepted
-    for small filters, where the plan-literal cost is negligible."""
+    for small filters, where the plan-literal cost is negligible.
+
+    ``words``: deprecated keyword alias of ``bitmap`` (the parameter's
+    former name)."""
+    if words is not None:
+        if bitmap is not None:
+            raise TypeError("pass bitmap or its deprecated alias words, "
+                            "not both")
+        import warnings
+        warnings.warn("bloom_contaminated(words=...) is deprecated; "
+                      "pass bitmap=", DeprecationWarning, stacklevel=2)
+        bitmap = words
+    if bitmap is None:
+        raise TypeError("bloom_contaminated() missing the bitmap argument")
     if isinstance(bitmap, DataFrame):
         if m_bits is None:
             raise ValueError("m_bits is required with a bitmap frame")

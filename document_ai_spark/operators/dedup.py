@@ -154,27 +154,32 @@ def _cap_bucket_items(grouped: DataFrame, max_bucket: int) -> DataFrame:
     (its first-band filter sees the earlier collision). The metric counts
     bucket truncation, not these suppressed later-band recoveries;
     accepted trade-off, caps only engage on adversarial buckets."""
+    return (_observe_cap(grouped, max_bucket)
+            .withColumn("items",
+                        F.slice(F.array_sort("items"), 1, max_bucket)))
+
+
+def _observe_cap(grouped: DataFrame, max_bucket: int) -> DataFrame:
+    """Attach _cap_bucket_items' lsh_cap observation (candidates
+    beyond ``max_bucket`` per `items` array, largest array) WITHOUT
+    truncating — for a consumer that applies the cap to `items` itself
+    and still needs the items beyond it."""
     _cap_obs_counter[0] += 1
-    sized = grouped.withColumn("_n", F.size("items")).observe(
-        f"lsh_cap_{_cap_obs_counter[0]}",
-        F.sum(F.greatest(F.col("_n") - max_bucket, F.lit(0)))
-         .alias("n_dropped_candidates"),
-        F.max("_n").alias("max_bucket_size"),
-    )
+
+    def metrics():
+        n = F.size("items")
+        return (F.sum(F.greatest(n - max_bucket, F.lit(0)))
+                .alias("n_dropped_candidates"),
+                F.max(n).alias("max_bucket_size"))
+
+    sized = grouped.observe(f"lsh_cap_{_cap_obs_counter[0]}", *metrics())
     stack = _cap_collectors()
     if stack:
         from pyspark.sql import Observation
         obs = Observation()
-        sized = sized.observe(
-            obs,
-            F.sum(F.greatest(F.col("_n") - max_bucket, F.lit(0)))
-             .alias("n_dropped_candidates"),
-            F.max("_n").alias("max_bucket_size"))
+        sized = sized.observe(obs, *metrics())
         stack[-1].observations.append(obs)
-    return (sized
-            .withColumn("items",
-                        F.slice(F.array_sort("items"), 1, max_bucket))
-            .drop("_n"))
+    return sized
 
 
 def _word_shingles_sql(k: int = SHINGLE_K) -> str:

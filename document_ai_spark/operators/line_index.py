@@ -53,24 +53,23 @@ class LineIndex(AtomicBatchIndex):
         index state plus the batch itself, then commit the batch's line
         aggregate. Returns (doc_id, text_dedup, n_lines, n_removed) —
         one row per batch doc. Re-running a committed batch_id strips
-        against exactly the index it saw the first time (before_seq)
+        against exactly the index it saw the first time (Batch.prior)
         without double-appending."""
         # line_frequencies IS the batch-local per-line aggregate
         # (count-distinct docs + min doc_id, blank lines excluded);
         # the staging write materializes it once for both the strip
         # below and the committed index batch.
-        batch_agg, seq, replay, stage, final = self._open_batch(
+        b = self._open_batch(
             spark, batch_id, lambda: line_frequencies(batch_df))
 
         # Accrete: earlier-committed counts + this batch's. min() over
         # keep_doc_id implements first-seen-wins under the ascending-
         # doc_id ingestion contract (see module docstring).
-        combined = (self.index_df(spark, before_seq=seq)
-                    .unionByName(batch_agg)
+        combined = (self.prior_df(spark, b)
+                    .unionByName(b.rows)
                     .groupBy("lk")
                     .agg(F.sum("n_docs").alias("n_total"),
                          F.min("keep_doc_id").alias("keep_doc_id")))
         hot = (combined.where(F.col("n_total") >= self.min_docs)
                .select("lk", "keep_doc_id"))
-        return self._close_batch(strip_hot_lines(batch_df, hot),
-                                 replay, stage, final)
+        return self._close_batch(strip_hot_lines(batch_df, hot), b)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..session import fan_out
-from .dedup import _cap_bucket_items
+from .dedup import _cap_bucket_items, _observe_cap
 
 
 def _cosine(a, b):
@@ -155,7 +155,8 @@ IVF_SAMPLE_MOD = 2   # train on vec_id % MOD == 0 (deterministic sample)
 
 
 def _assign_with_cos(base: DataFrame, cents: DataFrame,
-                     impl: str | None = None) -> DataFrame:
+                     impl: str | None = None,
+                     crows: list | None = None) -> DataFrame:
     """Argmax-cosine centroid per vector, KEEPING the winning cos_c;
     ties to the lowest centroid_id. The ONE assignment rule shared by
     Lloyd training, semdedup, and the incremental SemanticIndex (a
@@ -165,11 +166,15 @@ def _assign_with_cos(base: DataFrame, cents: DataFrame,
     Implementations (parity-tested equal): "arrow" (default) — BLAS
     candidate scoring + JVM argmax over ~1 candidate/row; "window" —
     the k-way broadcast cross join + row_number window, which shuffles
-    every vector k times with its embedding aboard."""
+    every vector k times with its embedding aboard.
+
+    ``crows``: the codebook's (centroid_id, cent) rows when the caller
+    already holds them (vector_index.CodebookIndex memoizes them); the
+    arrow form then skips its collect job."""
     if impl is None:
         impl = EMB_SWEEP_DEFAULT
     if impl == "arrow":
-        return _assign_arrow(base, cents)
+        return _assign_arrow(base, cents, crows)
     scored = (base.withColumn("_nrm", item_norm(F.col("emb")))
               .crossJoin(F.broadcast(
                   cents.withColumn("_cnrm", item_norm(F.col("cent")))))
@@ -182,7 +187,8 @@ def _assign_with_cos(base: DataFrame, cents: DataFrame,
             .select("vec_id", "emb", "centroid_id", "cos_c"))
 
 
-def _assign_arrow(base: DataFrame, cents: DataFrame) -> DataFrame:
+def _assign_arrow(base: DataFrame, cents: DataFrame,
+                  crows: list | None = None) -> DataFrame:
     """Vectorized argmax-cosine assignment (guide §4.2 + §2.3).
 
     The codebook is collected to the driver (k rows — control-plane
@@ -206,7 +212,8 @@ def _assign_arrow(base: DataFrame, cents: DataFrame) -> DataFrame:
     picks the LOWEST centroid_id with cos_c NULL — emitted directly."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    crows = cents.select("centroid_id", "cent").collect()
+    if crows is None:
+        crows = cents.select("centroid_id", "cent").collect()
     if not crows:
         return base.sparkSession.createDataFrame(
             [], StructType(list(base.schema.fields) + [
@@ -873,8 +880,9 @@ def greedy_drop_expr(cos_min: float):
     array<struct<c,v,e,nrm>> column: per item y at 0-based position j,
     dropped iff ANY of the j earlier items is >= cos_min
     cosine-similar. exists() short-circuits; the first item of every
-    cluster is always kept (empty slice). Shared by semdedup and the
-    incremental SemanticIndex. Zero-norm guard: a raw 0/0 cosine is
+    cluster is always kept (empty slice). semdedup's "sql" sweep, and
+    the reference the Arrow kernels are parity-tested against.
+    Zero-norm guard: a raw 0/0 cosine is
     NaN, which Spark orders ABOVE every real number — unguarded,
     NaN >= cos_min is TRUE and a zero (empty-doc) vector would drop
     against anything; guarded, zero vectors match nothing (the
@@ -891,145 +899,216 @@ def greedy_drop_expr(cos_min: float):
 
 
 def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
-                           cos_min: float,
-                           sweep: str | None = None) -> DataFrame:
+                           cos_min: float) -> DataFrame:
     """Distinct `vec_id`s of ``new`` rows scoring round(cos, 6) >=
     cos_min against ANY ``idx`` row of the same centroid — the
-    incremental SemanticIndex's batch-vs-index leg.
+    incremental SemanticIndex's batch-vs-index rule as a SQL join
+    filter (per-side norms precomputed, one fold per pair).
 
-    Semantics are the old join-filter's, mirrored exactly: NULL
-    cosines (ragged/null vectors) fail the filter -> keep; NaN drops
-    (Spark orders NaN above all doubles); a zero-norm pair scores 0.0
-    via the CASE short-circuit and drops only when cos_min <= 0. The
-    "sql" form is that join (with per-side norms precomputed — one
-    fold per pair instead of three); the default "arrow" form groups
-    both sides by centroid and runs the rectangular BLAS-prefiltered
-    exact kernel (_cand_cos_exact's discipline: dgemm candidates at
-    1e-9 slack, bit-exact left-fold recompute, definite verdicts 1e-6
-    away from the threshold, JVM exists(round(...)) over the ambiguous
-    band). Old-side order inside a cluster is irrelevant (the verdict
-    is an ANY), so collect_list nondeterminism cannot change results."""
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep != "arrow":
-        cross = (new.alias("n").withColumn("_nn", item_norm(F.col("emb")))
-                 .join(idx.alias("o")
-                       .withColumn("_on", item_norm(F.col("emb"))),
-                       ["centroid_id"])
-                 .where(F.round(_cosine_pre(F.col("n.emb"), F.col("o.emb"),
-                                            F.col("_nn"), F.col("_on")), 6)
-                        >= cos_min))
-        return cross.select(F.col("n.vec_id").alias("vec_id")).distinct()
+    It is the reference semantics of the cross leg of
+    batch_and_index_verdicts (parity-tested): NULL cosines
+    (ragged/null vectors) fail the filter -> keep; NaN drops (Spark
+    orders NaN above all doubles); a zero-norm pair scores 0.0 via the
+    CASE short-circuit and drops only when cos_min <= 0."""
+    cross = (new.alias("n").withColumn("_nn", item_norm(F.col("emb")))
+             .join(idx.alias("o")
+                   .withColumn("_on", item_norm(F.col("emb"))),
+                   ["centroid_id"])
+             .where(F.round(_cosine_pre(F.col("n.emb"), F.col("o.emb"),
+                                        F.col("_nn"), F.col("_on")), 6)
+                    >= cos_min))
+    return cross.select(F.col("n.vec_id").alias("vec_id")).distinct()
 
+
+class _ItemViews:
+    """NumPy views over an Arrow ``list<struct<..., e, nrm>>`` column:
+    per-row item offsets, the item structs, the embedding list array
+    and its offsets, the JVM-computed norms, and — when no vector or
+    element is null — the flat embedding values."""
+
+    def __init__(self, np, pa, col):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        self.offs = col.offsets.to_numpy()
+        self.struct = col.values
+        self.embl = self.struct.field("e")
+        self.emb_offs = self.embl.offsets.to_numpy()
+        nrm = self.struct.field("nrm")
+        self.nrm = nrm.to_numpy(zero_copy_only=False)
+        self.dirty = (self.embl.null_count > 0
+                      or self.embl.values.null_count > 0
+                      or nrm.null_count > 0)
+        self.vals = None if self.dirty else \
+            self.embl.values.to_numpy(zero_copy_only=False)
+
+    def dims(self, np, i0, n):
+        return np.diff(self.emb_offs[i0:i0 + n + 1])
+
+    def matrix(self, np, i0, n, d):
+        if d == 0:
+            return np.zeros((n, 0))
+        return self.vals[self.emb_offs[i0]:self.emb_offs[i0 + n]] \
+            .reshape(n, d)
+
+
+def _fold_verdicts(np, n, jj, cos, lo, hi):
+    """(definite, amb) for n judged items from the candidate cosines
+    ``cos`` of items ``jj``: NaN or >= hi drops definitely (round(x, 6)
+    moves x by < 1e-6); raw cosines in [lo, hi) of items not dropped
+    definitely go to ``amb`` for the JVM's exact round."""
+    dd = np.zeros(n, dtype=bool)
+    amb = [[] for _ in range(n)]
+    if len(jj):
+        t = np.isnan(cos) | (cos >= hi)
+        dd[jj[t]] = True
+        am = ~t & (cos >= lo)
+        for j, c in zip(jj[am], cos[am]):
+            if not dd[j]:
+                amb[int(j)].append(float(c))
+    return dd, amb
+
+
+def _rect_block(np, N, a0, m, O, b0, p, lo, hi):
+    """Batch-vs-index verdicts for the m items of ``N`` at a0 against
+    the p items of ``O`` at b0 (ANY over O), under
+    batch_vs_index_dropped's rule: dgemm candidates at 1e-9 slack
+    (_cand_cos_exact's discipline), the bit-exact left-fold cosine for
+    candidates only, zero-norm pairs scored 0.0. Null/ragged vectors
+    take the per-pair fallback."""
+    nx, ny = N.nrm[a0:a0 + m], O.nrm[b0:b0 + p]
+    ndims, odims = N.dims(np, a0, m), O.dims(np, b0, p)
+    if N.dirty or O.dirty or ndims.min() != ndims.max() \
+            or odims.min() != odims.max() or ndims[0] != odims[0]:
+        dd, amb = _rect_slow(np, N.embl, O.embl, a0, m, b0, p, nx, ny,
+                             lo, hi)
+        return np.asarray(dd, dtype=bool), amb
+    d = int(ndims[0])
+    X, Y = N.matrix(np, a0, m, d), O.matrix(np, b0, p, d)
+    den = nx[:, None] * ny[None, :]
+    B = X @ Y.T if d else np.zeros((m, p))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        B /= den
+    np.copyto(B, 0.0, where=(den == 0.0))
+    ri, ci = np.nonzero(~np.isfinite(B) | (B >= lo - 1e-9))
+    cos = np.zeros(0)
+    if len(ri):
+        acc = np.zeros(len(ri))
+        for t in range(d):
+            acc += X[ri, t] * Y[ci, t]          # exact left fold
+        dend = nx[ri] * ny[ci]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = acc / dend
+        cos = np.where(dend == 0.0, 0.0, cos)
+    return _fold_verdicts(np, m, ri, cos, lo, hi)
+
+
+def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
+                             cos_min: float,
+                             max_cluster: int) -> DataFrame:
+    """(vec_id, centroid_id, cos_c, sem_keep) for every row of ``new``
+    (vec_id, emb, centroid_id, cos_c) — the incremental SemanticIndex
+    verdicts in ONE grouping per centroid_id and ONE mapInArrow pass.
+
+    ``idx``: index rows of the clusters ``new`` touches (None: empty
+    index); each cluster is capped here to its ``max_cluster`` lowest
+    vec_ids. A batch vector is dropped iff
+      * intra: it is among its cluster's first ``max_cluster`` batch
+        items in keep order (cos_c ASC, vec_id ASC) and an earlier one
+        of them scores round(cos, 6) >= cos_min — greedy_verdicts'
+        rule: zero-norm pairs are false, NULL cosines keep, NaN drops;
+        the cap is observed as lsh_cap (_cap_bucket_items' metric);
+      * cross: it scores round(cos, 6) >= cos_min against ANY capped
+        index row of its cluster — batch_vs_index_dropped's rule:
+        zero-norm pairs score 0.0, NULL cosines keep, NaN drops. Every
+        batch vector is judged, also those beyond the intra cap.
+    Both legs run semdedup's per-cluster kernels (_greedy_block,
+    _rect_block) and return definite verdicts plus the raw cosines in
+    the ambiguous band; the JVM applies the one round:
+    sem_keep = NOT (definite OR exists(amb, round(c, 6) >= cos_min)).
+    No index x index cosine is computed."""
     from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
                                    StructField, StructType)
 
+    def item(side, c):
+        return F.struct(F.lit(side).alias("s"), c.alias("c"),
+                        F.col("vec_id").alias("v"), F.col("emb").alias("e"),
+                        item_norm(F.col("emb")).alias("nrm")).alias("it")
+
+    rows = new.select("centroid_id", item(0, F.col("cos_c")))
+    if idx is not None:
+        w = Window.partitionBy("centroid_id").orderBy("vec_id")
+        capped = (idx.withColumn("_rn", F.row_number().over(w))
+                  .where(F.col("_rn") <= max_cluster))
+        rows = rows.unionByName(capped.select(
+            "centroid_id", item(1, F.lit(None).cast("double"))))
+    # array_sort on struct(s, c, v, ...) with s constant orders the
+    # batch items by (cos_c ASC, vec_id ASC): the keep order.
+    grouped = (rows.groupBy("centroid_id")
+               .agg(F.collect_list("it").alias("_all"))
+               .select("centroid_id",
+                       F.array_sort(F.filter("_all", lambda x: x["s"] == 0))
+                       .alias("items"),
+                       F.filter("_all", lambda x: x["s"] == 1)
+                       .alias("o_items")))
+    grouped = _observe_cap(grouped, max_cluster)
+
     lo = float(cos_min) - _SWEEP_MARGIN
     hi = float(cos_min) + _SWEEP_MARGIN
-    gn = (new.groupBy("centroid_id")
-          .agg(F.collect_list(F.struct(
-              F.col("vec_id").alias("v"), F.col("emb").alias("e"),
-              item_norm(F.col("emb")).alias("nrm"))).alias("n_items")))
-    go = (idx.groupBy("centroid_id")
-          .agg(F.collect_list(F.struct(
-              F.col("emb").alias("e"),
-              item_norm(F.col("emb")).alias("nrm"))).alias("o_items")))
-    both = gn.join(go, "centroid_id").select("n_items", "o_items")
-    id_type = new.schema["vec_id"].dataType
+    cap = int(max_cluster)
     out_schema = StructType([
-        StructField("vec_id", id_type),
+        StructField("vec_id", new.schema["vec_id"].dataType),
+        StructField("centroid_id", new.schema["centroid_id"].dataType),
+        StructField("cos_c", DoubleType()),
         StructField("dropped_def", BooleanType()),
         StructField("amb", ArrayType(DoubleType()))])
 
-    def sweep_fn(batches):
+    def judge(batches):
         import numpy as np
         import pyarrow as pa
 
         for batch in batches:
-            nl = batch.column("n_items")
-            ol = batch.column("o_items")
-            if isinstance(nl, pa.ChunkedArray):
-                nl = nl.combine_chunks()
-            if isinstance(ol, pa.ChunkedArray):
-                ol = ol.combine_chunks()
-            n_offs, o_offs = nl.offsets.to_numpy(), ol.offsets.to_numpy()
-            ns, os_ = nl.values, ol.values
-            n_ids = ns.field("v").to_numpy(zero_copy_only=False)
-            n_nrm = ns.field("nrm").to_numpy(zero_copy_only=False)
-            o_nrm = os_.field("nrm").to_numpy(zero_copy_only=False)
-            nel, oel = ns.field("e"), os_.field("e")
-            ne_offs, oe_offs = nel.offsets.to_numpy(), \
-                oel.offsets.to_numpy()
-            dirty = (nel.null_count > 0 or nel.values.null_count > 0
-                     or oel.null_count > 0 or oel.values.null_count > 0)
-            if not dirty:
-                ne_vals = nel.values.to_numpy(zero_copy_only=False)
-                oe_vals = oel.values.to_numpy(zero_copy_only=False)
-            out_ids, out_def, out_amb = [], [], []
-            for r in range(len(nl)):
-                a0, a1 = n_offs[r], n_offs[r + 1]
-                b0, b1 = o_offs[r], o_offs[r + 1]
-                m, p = a1 - a0, b1 - b0
-                if m == 0 or p == 0:
+            N = _ItemViews(np, pa, batch.column("items"))
+            O = _ItemViews(np, pa, batch.column("o_items"))
+            pos, grp, out_def, out_amb = [], [], [], []
+            for r in range(len(N.offs) - 1):
+                a0, m = int(N.offs[r]), int(N.offs[r + 1] - N.offs[r])
+                if m == 0:
                     continue
-                ids = n_ids[a0:a1]
-                nx = n_nrm[a0:a1]
-                ny = o_nrm[b0:b1]
-                ndims = np.diff(ne_offs[a0:a1 + 1])
-                odims = np.diff(oe_offs[b0:b1 + 1])
-                if dirty or ndims.min() != ndims.max() \
-                        or odims.min() != odims.max() \
-                        or (m and p and ndims[0] != odims[0]):
-                    dd, amb = _rect_slow(np, nel, oel, int(a0), m,
-                                         int(b0), p, nx, ny, lo, hi)
-                else:
-                    d = int(ndims[0])
-                    X = ne_vals[ne_offs[a0]:ne_offs[a1]].reshape(m, d) \
-                        if d else np.zeros((m, 0))
-                    Y = oe_vals[oe_offs[b0]:oe_offs[b1]].reshape(p, d) \
-                        if d else np.zeros((p, 0))
-                    den = nx[:, None] * ny[None, :]
-                    B = X @ Y.T if d else np.zeros((m, p))
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        B /= den
-                    np.copyto(B, 0.0, where=(den == 0.0))
-                    cand = ~np.isfinite(B) | (B >= lo - 1e-9)
-                    ri, ci = np.nonzero(cand)
-                    dd = np.zeros(m, dtype=bool)
-                    amb = [[] for _ in range(m)]
-                    if len(ri):
-                        acc = np.zeros(len(ri))
-                        for t in range(d):
-                            acc += X[ri, t] * Y[ci, t]   # exact fold
-                        dend = nx[ri] * ny[ci]
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            cos = acc / dend
-                        cos = np.where(dend == 0.0, 0.0, cos)
-                        t_ = np.isnan(cos) | (cos >= hi)
-                        dd[ri[t_]] = True
-                        am = ~t_ & (cos >= lo) & (cos < hi)
-                        for j, c in zip(ri[am], cos[am]):
-                            if not dd[j]:
-                                amb[int(j)].append(float(c))
-                        for j in np.nonzero(dd)[0]:
-                            amb[int(j)] = []
-                out_ids.append(ids)
-                out_def.append(np.asarray(dd, dtype=bool))
+                nc = min(m, cap)
+                dd = np.zeros(m, dtype=bool)
+                amb = [[] for _ in range(m)]
+                if nc:
+                    dd[:nc], amb[:nc] = _greedy_block(np, N, a0, nc,
+                                                      lo, hi)
+                b0, p = int(O.offs[r]), int(O.offs[r + 1] - O.offs[r])
+                if p:
+                    dc, ac = _rect_block(np, N, a0, m, O, b0, p, lo, hi)
+                    dd |= dc
+                    amb = [[] if dd[j] else amb[j] + ac[j]
+                           for j in range(m)]
+                pos.append(np.arange(a0, a0 + m))
+                grp.append(np.full(m, r))
+                out_def.append(dd)
                 out_amb.extend(amb)
-            if out_ids:
-                pa_id = ns.field("v").type
+            if pos:
+                take = pa.array(np.concatenate(pos))
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_ids)).cast(pa_id),
+                    [N.struct.field("v").take(take),
+                     batch.column("centroid_id").take(
+                         pa.array(np.concatenate(grp))),
+                     N.struct.field("c").take(take),
                      pa.array(np.concatenate(out_def), type=pa.bool_()),
                      pa.array(out_amb, type=pa.list_(pa.float64()))],
-                    names=["vec_id", "dropped_def", "amb"])
+                    names=["vec_id", "centroid_id", "cos_c",
+                           "dropped_def", "amb"])
 
-    judged = both.mapInArrow(sweep_fn, out_schema)
-    return (judged.where(
-        F.col("dropped_def")
-        | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
-        .select("vec_id").distinct())
+    judged = grouped.select("centroid_id", "items", "o_items") \
+        .mapInArrow(judge, out_schema)
+    return judged.select(
+        "vec_id", "centroid_id", "cos_c",
+        (~(F.col("dropped_def")
+           | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min))))
+        .alias("sem_keep"))
 
 
 def _rect_slow(np, nel, oel, a0, m, b0, p, nx, ny, lo, hi):
@@ -1085,14 +1164,16 @@ def greedy_verdicts(grouped: DataFrame, cos_min: float,
     under the SemDeDup greedy rule — item j is dropped iff ANY earlier
     item scores round(cos, 6) >= cos_min against it.
 
-    One seam shared by semdedup and the incremental SemanticIndex so
-    their batch == incremental parity holds by construction. `sweep`
-    picks the implementation: "arrow" (vectorized NumPy, default) or
-    "sql" (the pure-JVM greedy_drop_expr). Verdict equivalence note:
-    the SQL exists() can return NULL for a pair whose cosine is NULL
-    (null elements / ragged dims) — both consumers coalesce NULL to
-    false/keep, and the Arrow path emits false directly; the parity
-    test compares post-coalesce semantics."""
+    semdedup's seam; its per-cluster kernel (_greedy_block) is also the
+    intra leg of the incremental SemanticIndex's one-pass verdicts
+    (batch_and_index_verdicts), so their batch == incremental parity
+    holds by construction. `sweep` picks the implementation: "arrow"
+    (vectorized NumPy, default) or "sql" (the pure-JVM
+    greedy_drop_expr). Verdict equivalence note: the SQL exists() can
+    return NULL for a pair whose cosine is NULL (null elements / ragged
+    dims) — consumers coalesce NULL to false/keep, and the Arrow path
+    emits false directly; the parity test compares post-coalesce
+    semantics."""
     if sweep is None:
         sweep = EMB_SWEEP_DEFAULT
     if sweep == "arrow":
@@ -1133,64 +1214,21 @@ def _greedy_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
         import pyarrow as pa
 
         for batch in batches:
-            items = batch.column("items")
-            if isinstance(items, pa.ChunkedArray):
-                items = items.combine_chunks()
-            offs = items.offsets.to_numpy()
-            struct = items.values
-            vec_ids = struct.field("v").to_numpy(zero_copy_only=False)
-            nrms = struct.field("nrm").to_numpy(zero_copy_only=False)
-            embl = struct.field("e")
-            emb_offs = embl.offsets.to_numpy()
-            slow = (embl.null_count > 0 or embl.values.null_count > 0
-                    or struct.field("nrm").null_count > 0)
-            if not slow:
-                emb_vals = embl.values.to_numpy(zero_copy_only=False)
-            out_ids, out_def, out_amb = [], [], []
-            for r in range(len(items)):
-                i0, i1 = offs[r], offs[r + 1]
-                n = i1 - i0
+            V = _ItemViews(np, pa, batch.column("items"))
+            pos, out_def, out_amb = [], [], []
+            for r in range(len(V.offs) - 1):
+                i0, n = int(V.offs[r]), int(V.offs[r + 1] - V.offs[r])
                 if n == 0:
                     continue
-                ids = vec_ids[i0:i1]
-                nr = nrms[i0:i1]
-                dims = np.diff(emb_offs[i0:i1 + 1])
-                uniform = dims.min() == dims.max()
-                if slow or not uniform:
-                    dd, amb = _greedy_cluster_slow(embl, int(i0), n, nr,
-                                                   lo, hi)
-                else:
-                    d = int(dims[0])
-                    if d == 0:
-                        X = np.zeros((n, 0))
-                    else:
-                        X = emb_vals[emb_offs[i0]:emb_offs[i1]] \
-                            .reshape(n, d)
-                    # zero-norm pairs are excluded by the kernel —
-                    # exactly the CASE -> false rule of the SQL sweep.
-                    ii, jj, cos = _cand_cos_exact(np, X, nr, lo)
-                    dd = np.zeros(n, dtype=bool)
-                    amb = [[] for _ in range(n)]
-                    if len(ii):
-                        t = np.isnan(cos) | (cos >= hi)
-                        dd[jj[t]] = True
-                        am = ~t & (cos >= lo)
-                        for j, c in zip(jj[am], cos[am]):
-                            if not dd[j]:
-                                amb[int(j)].append(float(c))
-                        for j in np.nonzero(dd)[0]:
-                            amb[int(j)] = []
-                out_ids.append(ids)
+                dd, amb = _greedy_block(np, V, i0, n, lo, hi)
+                pos.append(np.arange(i0, i0 + n))
                 out_def.append(dd)
                 out_amb.extend(amb)
-            if out_ids:
-                pa_id = struct.field("v").type
+            if pos:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(out_ids)).cast(pa_id),
-                     pa.array(np.concatenate(out_def),
-                              type=pa.bool_()),
-                     pa.array(out_amb,
-                              type=pa.list_(pa.float64()))],
+                    [V.struct.field("v").take(pa.array(np.concatenate(pos))),
+                     pa.array(np.concatenate(out_def), type=pa.bool_()),
+                     pa.array(out_amb, type=pa.list_(pa.float64()))],
                     names=["vec_id", "dropped_def", "amb"])
 
     judged = grouped.select("items").mapInArrow(sweep, out_schema)
@@ -1199,6 +1237,21 @@ def _greedy_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
         (F.col("dropped_def")
          | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
         .alias("dropped"))
+
+
+def _greedy_block(np, V, i0, n, lo, hi):
+    """Greedy SemDeDup verdicts for the n keep-ordered items of ``V`` at
+    i0: item j is judged against every earlier item. Zero-norm pairs
+    are excluded by the kernel — exactly the CASE -> false rule of the
+    SQL sweep; null/ragged clusters take the per-pair fallback."""
+    nr = V.nrm[i0:i0 + n]
+    dims = V.dims(np, i0, n)
+    if V.dirty or dims.min() != dims.max():
+        dd, amb = _greedy_cluster_slow(V.embl, i0, n, nr, lo, hi)
+        return np.asarray(dd, dtype=bool), amb
+    ii, jj, cos = _cand_cos_exact(np, V.matrix(np, i0, n, int(dims[0])),
+                                  nr, lo)
+    return _fold_verdicts(np, n, jj, cos, lo, hi)
 
 
 def _greedy_cluster_slow(embl, i0, n, nr, lo, hi):

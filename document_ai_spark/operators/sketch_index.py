@@ -149,9 +149,10 @@ class SketchIndex(AtomicBatchIndex):
         (batch-internal + batch-vs-index), then commit the batch's
         sketches. Re-running an already-committed batch_id returns its
         pairs again without double-appending (idempotent resume)."""
-        new, seq, replay, stage, final = self._open_batch(
+        b = self._open_batch(
             spark, batch_id,
             lambda: banded_sketch_rows(batch_df, self.bands, self.rows))
+        new = b.rows
 
         # (a) batch-internal pairs: group new rows by (band, band_hash).
         new_grouped = (
@@ -164,16 +165,16 @@ class SketchIndex(AtomicBatchIndex):
 
         # (b) batch-vs-index pairs. Probe-side pre-filter: the index scan
         # keeps only buckets the batch actually touches (broadcast of the
-        # batch's band keys — micro-batch-sized), THEN the matched index
-        # buckets are capped and joined.
-        # before_seq: a replayed batch probes exactly the index it saw
+        # batch's band keys — micro-batch-sized; a semi-join needs no
+        # distinct), THEN the matched index buckets are capped and joined.
+        # b.prior: a replayed batch probes exactly the index it saw
         # the first time — not itself (self-pairs, duplicated intra
         # pairs) and not later-committed batches (pairs those batches
         # already emitted).
         cands = intra
-        if self._has_prior(seq):
-            keys = new.select("band", "band_hash").distinct()
-            idx = self.index_df(spark, before_seq=seq).join(
+        if b.prior:
+            keys = new.select("band", "band_hash")
+            idx = self.prior_df(spark, b).join(
                 F.broadcast(keys), ["band", "band_hash"], "left_semi")
             w = Window.partitionBy("band", "band_hash").orderBy("doc_id")
             idx = (idx.withColumn("_rn", F.row_number().over(w))
@@ -191,5 +192,4 @@ class SketchIndex(AtomicBatchIndex):
                 .drop("band", "sig_a", "sig_b"))
             cands = intra.unionByName(cross)
 
-        return self._close_batch(_verify(cands, jaccard_min),
-                                 replay, stage, final)
+        return self._close_batch(_verify(cands, jaccard_min), b)

@@ -51,20 +51,19 @@ class SpanIndex(AtomicBatchIndex):
         Returns the dup_span_stats contract — (doc_id, n_tokens,
         n_windows, n_dup_windows, dup_span_frac), one row per batch doc.
         Re-running a committed batch_id scores against exactly the index
-        it saw the first time (before_seq) without double-appending."""
+        it saw the first time (Batch.prior) without double-appending."""
         # span_frequencies IS the batch-local aggregate; the staging
         # write materializes it once for both the scoring below and
         # the committed index batch.
-        batch_agg, seq, replay, stage, final = self._open_batch(
+        b = self._open_batch(
             spark, batch_id,
             lambda: span_frequencies(batch_df, w=self.w))
 
-        hot = (self.index_df(spark, before_seq=seq)
-               .unionByName(batch_agg)
+        hot = (self.prior_df(spark, b)
+               .unionByName(b.rows)
                .groupBy("fp")
                .agg(F.sum("n_docs").alias("n_total"))
                .where(F.col("n_total") >= self.min_docs)
                .select("fp"))
         return self._close_batch(
-            dup_span_stats_against(batch_df, hot, w=self.w),
-            replay, stage, final)
+            dup_span_stats_against(batch_df, hot, w=self.w), b)

@@ -52,15 +52,25 @@ class CodebookIndex(AtomicBatchIndex):
         super().__init__(root, {"k": k, "iters": iters,
                                 "sample_mod": sample_mod})
         self.k, self.iters, self.sample_mod = k, iters, sample_mod
+        self._rows = None
 
     def is_trained(self) -> bool:
         return self._is_committed(self._BATCH)
 
+    def centroid_rows(self, spark: SparkSession) -> list:
+        """The committed k (centroid_id, cent) rows, read once per
+        handle: the codebook is train-once, so every later assignment
+        reuses them without a parquet re-read and collect."""
+        if self._rows is None:
+            if not self.is_trained():
+                raise ValueError(f"no committed codebook under {self.root}; "
+                                 "call ensure(spark, emb) first")
+            self._rows = self.index_df(spark).collect()
+        return self._rows
+
     def centroids(self, spark: SparkSession) -> DataFrame:
-        if not self.is_trained():
-            raise ValueError(f"no committed codebook under {self.root}; "
-                             "call ensure(spark, emb) first")
-        return self.index_df(spark)
+        return spark.createDataFrame(self.centroid_rows(spark),
+                                     self.row_schema())
 
     def ensure(self, spark: SparkSession, emb: DataFrame) -> DataFrame:
         """The committed codebook, training it from ``emb`` only if this
@@ -69,9 +79,9 @@ class CodebookIndex(AtomicBatchIndex):
         deterministic result."""
         if not self.is_trained():
             stage, final = self._stage_paths(self._BATCH)
-            cents = kmeans_codebook(emb, self.k, self.iters,
-                                    self.sample_mod)
-            cents.write.mode("overwrite").parquet(stage)
+            self._write_rows(kmeans_codebook(emb, self.k, self.iters,
+                                             self.sample_mod), stage,
+                             first=True)
             self._stamp_seq(stage, self._next_seq())
             self._commit(stage, final)
         return self.centroids(spark)
@@ -126,8 +136,8 @@ class EmbeddingIndex(AtomicBatchIndex):
         (batch-internal + batch-vs-index), then commit the batch's
         banded rows. Replaying a committed batch_id returns its pairs
         again without double-appending (idempotent resume): it probes
-        exactly the index state it saw the first time (before_seq)."""
-        new, seq, replay, stage, final = self._open_batch(
+        exactly the index state it saw the first time (Batch.prior)."""
+        b = self._open_batch(
             spark, batch_id,
             lambda: banded_vector_rows(batch_emb, self.bands, self.rows))
 
@@ -135,7 +145,7 @@ class EmbeddingIndex(AtomicBatchIndex):
         # re-folded both norms for every candidate) and survivors-only
         # emission inside the HOF/join, the similarity.py sweep shape.
         from .similarity import _cosine_pre, item_norm
-        new = new.withColumn("nrm", item_norm(F.col("emb")))
+        new = b.rows.withColumn("nrm", item_norm(F.col("emb")))
 
         # (a) batch-internal pairs: identical shape to
         # similarity.embedding_near_dups' SQL sweep (items vec_id-
@@ -170,9 +180,9 @@ class EmbeddingIndex(AtomicBatchIndex):
         # buckets, then equi-join — never an index scan. Norms for the
         # index side are computed on the probed sliver only.
         cands = intra
-        if self._has_prior(seq):
+        if b.prior:
             keys = new.select("band", "bucket").distinct()
-            idx = self.index_df(spark, before_seq=seq).join(
+            idx = self.prior_df(spark, b).join(
                 F.broadcast(keys), ["band", "bucket"], "left_semi")
             w = Window.partitionBy("band", "bucket").orderBy("vec_id")
             idx = (idx.withColumn("_rn", F.row_number().over(w))
@@ -190,7 +200,7 @@ class EmbeddingIndex(AtomicBatchIndex):
                         "cos_sim"))
             cands = intra.unionByName(cross)
 
-        return self._close_batch(cands, replay, stage, final)
+        return self._close_batch(cands, b)
 
 
 class SemanticIndex(AtomicBatchIndex):
@@ -220,12 +230,16 @@ class SemanticIndex(AtomicBatchIndex):
     sem_keep=true (observed via the lsh_cap metric, never silent, but
     a near-no-op; see semdedup's auto-k note).
 
-    Scale shape: the codebook broadcasts; assignment is one window on
-    vec_id; intra-batch verdicts reuse the task-local greedy sweep;
-    the index is probed ONLY at clusters the batch touches (broadcast
-    semi-join on the batch's centroid ids) with a per-cluster cap —
-    never an index scan. Commits are atomic and replay-idempotent
-    (before_seq), the AtomicBatchIndex contract."""
+    Scale shape: the codebook's k rows are read once per handle and
+    ride in the assignment's task closure; assignment is one window on
+    vec_id. The verdicts are ONE pass: the index is probed ONLY at
+    clusters the batch touches (broadcast semi-join on the batch's
+    centroid ids) and capped per cluster by vec_id; one grouping per
+    centroid_id carries the batch items in keep order and the capped
+    index items, and one mapInArrow judges every batch vector against
+    both (similarity.batch_and_index_verdicts) — never an index scan,
+    no index x index cosines. Commits are atomic and replay-idempotent
+    (Batch.prior), the AtomicBatchIndex contract."""
 
     FORMAT = 1
     SCHEMA = ("vec_id bigint, emb array<double>, centroid_id bigint, "
@@ -242,68 +256,31 @@ class SemanticIndex(AtomicBatchIndex):
         self.codebook = CodebookIndex(f"{root}/_codebook", k=k,
                                       iters=iters)
 
-    def _assign(self, batch_emb: DataFrame, cents: DataFrame) -> DataFrame:
+    def _assign(self, spark: SparkSession,
+                batch_emb: DataFrame) -> DataFrame:
         # the ONE shared assignment rule — see similarity._assign_with_cos
         from .similarity import _assign_with_cos
         base = batch_emb.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"))
-        return _assign_with_cos(base, cents)
+        cb = self.codebook
+        return _assign_with_cos(base, cb.ensure(spark, batch_emb),
+                                crows=cb.centroid_rows(spark))
 
     def append_and_find(self, spark: SparkSession, batch_emb: DataFrame,
                         batch_id: str) -> DataFrame:
         """Verdicts (vec_id, centroid_id, cos_c, sem_keep) for the
         batch, then commit its assigned rows. Replay returns the same
         verdicts (probes the index state before its own seq)."""
-        def build():
-            cents = self.codebook.ensure(spark, batch_emb)
-            return self._assign(batch_emb, cents)
+        from .similarity import batch_and_index_verdicts
 
-        new, seq, replay, stage, final = self._open_batch(
-            spark, batch_id, build)
-
-        # (a) intra-batch greedy verdicts (the batch semdedup sweep) —
-        # through the SAME greedy_verdicts seam semdedup uses, so the
-        # batch == incremental parity holds whichever sweep
-        # implementation (arrow/sql) is active.
-        from .similarity import greedy_verdicts, item_norm
-        grouped = (new.groupBy("centroid_id")
-                   .agg(F.array_sort(F.collect_list(F.struct(
-                       F.col("cos_c").alias("c"),
-                       F.col("vec_id").alias("v"),
-                       F.col("emb").alias("e"),
-                       item_norm(F.col("emb")).alias("nrm"))))
-                       .alias("items")))
-        grouped = _cap_bucket_items(grouped, self.max_cluster)
-        intra = (greedy_verdicts(grouped, self.cos_min)
-                 .select("vec_id", F.col("dropped").alias("_di")))
-
-        # (b) batch-vs-index: touched clusters only, capped.
-        if self._has_prior(seq):
-            keys = new.select("centroid_id").distinct()
-            idx = self.index_df(spark, before_seq=seq).join(
-                F.broadcast(keys), ["centroid_id"], "left_semi")
-            w = Window.partitionBy("centroid_id").orderBy("vec_id")
-            idx = (idx.withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") <= self.max_cluster).drop("_rn"))
-            # Vectorized batch-vs-index verdicts (round 6): the old
-            # centroid-keyed join evaluated an interpreted 3-fold
-            # cosine for every (new, indexed) pair in the cluster —
-            # O(batch x cluster) lambda work that dominated the op at
-            # scale. Same seam family as greedy_verdicts; identical
-            # join-filter semantics (parity-tested).
-            from .similarity import batch_vs_index_dropped
-            cross = (batch_vs_index_dropped(new, idx, self.cos_min)
-                     .withColumn("_dc", F.lit(True)))
-        else:
-            cross = spark.createDataFrame([], "vec_id bigint, _dc boolean")
-
-        verdicts = (new.select("vec_id", "centroid_id", "cos_c")
-                    .join(intra, "vec_id", "left")
-                    .join(cross, "vec_id", "left")
-                    .withColumn(
-                        "sem_keep",
-                        ~(F.coalesce("_di", F.lit(False))
-                          | F.coalesce("_dc", F.lit(False))))
-                    .drop("_di", "_dc"))
-        return self._close_batch(verdicts, replay, stage, final)
+        b = self._open_batch(spark, batch_id,
+                             lambda: self._assign(spark, batch_emb))
+        idx = None
+        if b.prior:
+            # a semi-join needs no distinct on the probe keys
+            idx = self.prior_df(spark, b).join(
+                F.broadcast(b.rows.select("centroid_id")), ["centroid_id"],
+                "left_semi")
+        return self._close_batch(batch_and_index_verdicts(
+            b.rows, idx, self.cos_min, self.max_cluster), b)

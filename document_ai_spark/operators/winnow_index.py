@@ -85,8 +85,8 @@ class WinnowIndex(AtomicBatchIndex):
         (batch-internal + batch-vs-index), then commit the batch's
         fp-set rows. Re-running an already-committed batch_id returns
         its pairs again without double-appending (idempotent resume:
-        before_seq scopes the probe to exactly the index state the
-        batch saw the first time)."""
+        the probe reads exactly the batches committed before it, the
+        index state it saw the first time)."""
         # doc_id is pinned to string so heterogeneous upstream id types
         # cannot split the index schema across batches.
         def build():
@@ -97,8 +97,8 @@ class WinnowIndex(AtomicBatchIndex):
                 .select("doc_id",
                         F.col("n_fp").cast("long").alias("n_fp"), "fp"))
 
-        new, seq, replay, stage, final = self._open_batch(
-            spark, batch_id, build)
+        b = self._open_batch(spark, batch_id, build)
+        new = b.rows
 
         # (a) batch-internal pairs: the batch operator's bucket path.
         cands = _containment_candidates(new, max_bucket)
@@ -108,7 +108,7 @@ class WinnowIndex(AtomicBatchIndex):
         # first-collision trick exists for containment (the score
         # needs the COUNT), so the aggregation is the real cost —
         # its input is bounded by cap x batch fp count.
-        if self._has_prior(seq):
+        if b.prior:
             keys = new.select("fp").distinct()
             # distinct BEFORE the cap: a doc_id committed in several
             # batches (same-text re-ingestion) holds identical index
@@ -117,7 +117,7 @@ class WinnowIndex(AtomicBatchIndex):
             # inflating containment past 1.0. (Changed-text
             # re-ingestion under one doc_id stays out of contract —
             # ingest-once per doc_id, the family rule.)
-            idx = self.index_df(spark, before_seq=seq).join(
+            idx = self.prior_df(spark, b).join(
                 F.broadcast(keys), ["fp"], "left_semi").distinct()
             w_ = Window.partitionBy("fp").orderBy("doc_id")
             idx = (idx.withColumn("_rn", F.row_number().over(w_))
@@ -141,5 +141,4 @@ class WinnowIndex(AtomicBatchIndex):
             cands = cands.unionByName(cross)
 
         return self._close_batch(
-            _containment_verdict(cands, containment_min, min_shared),
-            replay, stage, final)
+            _containment_verdict(cands, containment_min, min_shared), b)

@@ -67,6 +67,25 @@ def test_replay_batch_is_idempotent(spark, tmp_path):
     assert len(idx.committed_batches()) == n
 
 
+def test_reopened_index_reads_first_batch_schema(spark, tmp_path):
+    """A fresh handle reads with the first batch's footer schema: string
+    doc_ids stay string (the declared keep_doc_id type is long), and the
+    strip keeps its parity with a corpus-wide recompute."""
+    batches = [b.withColumn("doc_id", F.format_string("d%03d", "doc_id"))
+               for b in _batches(_line_corpus(spark))]
+    root = str(tmp_path / "line_reopen")
+    got = set()
+    for i, b in enumerate(batches):
+        got |= _rowset(LineIndex(root).append_and_strip(spark, b,
+                                                        f"batch-{i}"))
+    docs = batches[0]
+    for b in batches[1:]:
+        docs = docs.unionByName(b)
+    assert got == _rowset(line_dedup(docs))
+    assert dict(LineIndex(root).index_df(spark).dtypes)["keep_doc_id"] \
+        == "string"
+
+
 def test_mismatched_min_docs_rejected(spark, tmp_path):
     root = str(tmp_path / "line_idx3")
     LineIndex(root, min_docs=2)

@@ -195,34 +195,50 @@ def test_assign_arrow_matches_window(spark):
 
 @pytest.mark.parametrize("cos_min", [0.95, 0.5, 0.0, -0.5])
 def test_batch_vs_index_arrow_matches_sql(spark, cos_min):
-    """batch_vs_index_dropped parity: the rectangular BLAS kernel must
-    reproduce the centroid-keyed join filter's semantics exactly —
-    NULL cosines keep, NaN drops, zero-norm pairs score 0.0 (dropping
-    only at cos_min <= 0), ragged/null vectors route through the
-    per-pair fallback."""
+    """batch_and_index_verdicts parity: the one-pass Arrow verdicts must
+    reproduce the SQL legs exactly — the intra greedy_drop_expr sweep
+    OR the centroid-keyed batch_vs_index_dropped join filter: NULL
+    cosines keep, NaN drops, zero-norm pairs score 0.0 against the
+    index (dropping only at cos_min <= 0) but false within the batch,
+    ragged/null vectors route through the per-pair fallbacks. The NaN
+    vector comes last in its cluster's keep order, so its NaN cosines
+    hide no earlier item's cross-leg verdict (vec 7 against index vec
+    15, cosine ~0.99995)."""
     from document_ai_spark.operators.similarity import (
+        batch_and_index_verdicts,
         batch_vs_index_dropped,
+        greedy_verdicts,
+        item_norm,
     )
 
     new_rows = [
-        (0, 0, [1.0, 2.0] + [0.0] * 62), (1, 0, [0.0] * 64),
-        (2, 1, [float("nan")] * 64), (3, 1, [1.0] * 64),
-        (4, 0, [1.0] * 32),
-        (5, 1, None), (6, 0, [1.0, None] + [1.0] * 62),
-        (7, 1, [1.0, 0.1] + [0.0] * 62),
+        (0, 0, 0.1, [1.0, 2.0] + [0.0] * 62), (1, 0, 0.2, [0.0] * 64),
+        (2, 1, 0.9, [float("nan")] * 64), (3, 1, 0.4, [1.0] * 64),
+        (4, 0, None, [1.0] * 32),
+        (5, 1, None, None), (6, 0, None, [1.0, None] + [1.0] * 62),
+        (7, 1, 0.5, [1.0, 0.1] + [0.0] * 62),
     ]
     idx_rows = [
-        (0, [2.0, 4.0] + [0.0] * 62), (0, [0.0] * 64),
-        (1, [1.0] * 64), (1, [-1.0] * 64),
-        (0, [1.0] * 32), (1, [1.0, 0.11] + [0.0] * 62),
-        (0, None),
+        (10, 0, [2.0, 4.0] + [0.0] * 62), (11, 0, [0.0] * 64),
+        (12, 1, [1.0] * 64), (13, 1, [-1.0] * 64),
+        (14, 0, [1.0] * 32), (15, 1, [1.0, 0.11] + [0.0] * 62),
+        (16, 0, None),
     ]
     new = spark.createDataFrame(
-        new_rows, "vec_id long, centroid_id long, emb array<double>")
+        new_rows,
+        "vec_id long, centroid_id long, cos_c double, emb array<double>")
     idx = spark.createDataFrame(
-        idx_rows, "centroid_id long, emb array<double>")
-    a = sorted(r.vec_id for r in batch_vs_index_dropped(
-        new, idx, cos_min, sweep="sql").collect())
-    b = sorted(r.vec_id for r in batch_vs_index_dropped(
-        new, idx, cos_min, sweep="arrow").collect())
-    assert a == b and a
+        idx_rows, "vec_id long, centroid_id long, emb array<double>")
+    grouped = new.groupBy("centroid_id").agg(F.array_sort(F.collect_list(
+        F.struct(F.col("cos_c").alias("c"), F.col("vec_id").alias("v"),
+                 F.col("emb").alias("e"),
+                 item_norm(F.col("emb")).alias("nrm")))).alias("items"))
+    intra = {r.vec_id for r in greedy_verdicts(grouped, cos_min,
+                                               sweep="sql").collect()
+             if r.dropped}
+    cross = {r.vec_id for r in
+             batch_vs_index_dropped(new, idx, cos_min).collect()}
+    got = {r.vec_id: r.sem_keep for r in batch_and_index_verdicts(
+        new, idx, cos_min, max_cluster=64).collect()}
+    assert got == {i: i not in intra | cross for i, *_ in new_rows}
+    assert cross - intra     # the cross leg decides some verdict alone

@@ -119,3 +119,59 @@ def test_old_format_index_rejected(spark, tmp_path):
         json.dump({"bands": 4, "rows": 2}, f)   # v1: no format field
     with pytest.raises(ValueError, match="format"):
         SketchIndex(root)
+
+
+def test_numeric_doc_ids_keep_their_type(spark, tmp_path):
+    """doc_id is an id column: bigint ids stay bigint in the pairs —
+    numeric least/greatest (5 before 1000005), not the lexicographic
+    order a cast to the declared string type would give — and the type
+    is pinned in _meta.json for a fresh handle's schema-pinned reads."""
+    text = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+            "lam mu nu xi omicron pi rho sigma tau upsilon")
+    b0 = spark.createDataFrame([(5, text), (7, "something else entirely")],
+                               "doc_id bigint, text string")
+    b1 = spark.createDataFrame([(1000005, text + " tail")],
+                               "doc_id bigint, text string")
+    root = str(tmp_path / "sketch_num")
+    idx = SketchIndex(root)
+    idx.append_and_find(spark, b0, "b0", jaccard_min=JACCARD_MIN)
+    pairs = idx.append_and_find(spark, b1, "b1", jaccard_min=JACCARD_MIN)
+    assert [(r.doc_a, r.doc_b) for r in pairs.collect()] == [(5, 1000005)]
+    assert dict(pairs.dtypes)["doc_a"] == "bigint"
+    fresh = SketchIndex(root).index_df(spark)
+    assert dict(fresh.dtypes)["doc_id"] == "bigint"
+    assert {r.doc_id for r in fresh.collect()} == {5, 7, 1000005}
+
+
+def test_reopened_index_reads_first_batch_schema(spark, tmp_path):
+    """A fresh handle on an index whose files hold bigint doc_ids (the
+    declared type is string) reads with the first batch's footer schema;
+    _meta.json holds only the parameters, as in indexes written before
+    reads were schema-pinned. A later batch is widened to the stored
+    types (int -> bigint), never re-typed: a batch of string doc_ids is
+    refused."""
+    import json
+    import os
+
+    text = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+            "lam mu nu xi omicron pi rho sigma tau upsilon")
+    root = str(tmp_path / "sketch_reopen")
+    b0 = spark.createDataFrame([(5, text)], "doc_id bigint, text string")
+    SketchIndex(root).append_and_find(spark, b0, "b0",
+                                      jaccard_min=JACCARD_MIN)
+    with open(os.path.join(root, "_meta.json")) as f:
+        assert set(json.load(f)) == {"bands", "rows", "format"}
+
+    idx = SketchIndex(root)
+    pairs = idx.append_and_find(
+        spark, spark.createDataFrame([(1000005, text + " tail")],
+                                     "doc_id int, text string"),
+        "b1", jaccard_min=JACCARD_MIN)
+    assert [(r.doc_a, r.doc_b) for r in pairs.collect()] == [(5, 1000005)]
+    assert dict(idx.index_df(spark).dtypes)["doc_id"] == "bigint"
+    with pytest.raises(ValueError, match="doc_id"):
+        idx.append_and_find(
+            spark, spark.createDataFrame([("d9", text)],
+                                         "doc_id string, text string"),
+            "b2", jaccard_min=JACCARD_MIN)
+    assert idx.committed_batches() == ["b0", "b1"]
