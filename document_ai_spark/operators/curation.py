@@ -902,12 +902,15 @@ def bloom_bitmap_df(keys: DataFrame, key_col: str = "text",
 
 
 def bloom_hit_col(key, bm, m_bits: int, k: int = BLOOM_K):
-    """bloom_hit against a bitmap COLUMN (the `_bm` array from
-    bloom_bitmap_df, attached via one broadcast cross join) instead of
-    a plan-literal list. Identical probe math; m_bits must match the
-    bitmap's 64 * size(_bm)."""
+    """Boolean column: all k probe positions of ``key`` are set in the
+    bitmap COLUMN ``bm`` (the `_bm` array from bloom_bitmap_df, attached
+    via one broadcast cross join) — a pure map-side expression, zero
+    shuffles, zero per-row Python. m_bits must match the bitmap's
+    64 * size(_bm)."""
     return F.forall(
         _bloom_positions(key, m_bits, k),
+        # call_function: the F.shiftright wrapper only takes a Python
+        # int shift amount; the SQL function takes a column.
         lambda p: F.call_function(
             "shiftright",
             F.element_at(bm, F.shiftright(p, 6).cast("int") + F.lit(1)),
@@ -923,24 +926,6 @@ def bloom_eval_texts(eval_docs: DataFrame,
     diverge on null/normalization semantics."""
     return (eval_docs.where(F.col(text_col).isNotNull())
             .select(F.col(text_col).alias("_etext")).distinct())
-
-
-def bloom_hit(key, words: list, k: int = BLOOM_K):
-    """Boolean column: all k probe positions of ``key`` are set in the
-    bitmap. The bitmap ships as ONE array<bigint> literal inside the
-    plan (the task binary), so membership is a pure map-side expression
-    — zero joins, zero shuffles, zero per-row Python."""
-    m_bits = len(words) * 64
-    bm = F.lit(words)
-    return F.forall(
-        _bloom_positions(key, m_bits, k),
-        # call_function: the F.shiftright wrapper only takes a Python
-        # int shift amount; the SQL function takes a column.
-        lambda p: F.call_function(
-            "shiftright",
-            F.element_at(bm, F.shiftright(p, 6).cast("int") + F.lit(1)),
-            F.pmod(p, F.lit(64)).cast("int"))
-        .bitwiseAND(F.lit(1)) == F.lit(1))
 
 
 def bloom_decontaminate(docs: DataFrame, eval_docs: DataFrame,
@@ -1009,8 +994,8 @@ def bloom_contaminated(docs: DataFrame, eval_texts: DataFrame,
     ``bitmap``: the one-row frame from bloom_bitmap_df (pass its
     ``m_bits`` too) — attached to the corpus via one broadcast cross
     join, so the corpus side still never shuffles before the confirm
-    join. A Python list (legacy bloom_bitmap output) is still accepted
-    for small filters, where the plan-literal cost is negligible.
+    join. A Python word list (bloom_bitmap output) is wrapped into the
+    same one-row frame (one array value, not one plan node per word).
 
     ``words``: deprecated keyword alias of ``bitmap`` (the parameter's
     former name)."""
@@ -1024,18 +1009,17 @@ def bloom_contaminated(docs: DataFrame, eval_texts: DataFrame,
         bitmap = words
     if bitmap is None:
         raise TypeError("bloom_contaminated() missing the bitmap argument")
-    if isinstance(bitmap, DataFrame):
-        if m_bits is None:
-            raise ValueError("m_bits is required with a bitmap frame")
-        cand = (docs.where(F.col(text_col).isNotNull())
-                .crossJoin(F.broadcast(bitmap))
-                .where(bloom_hit_col(F.col(text_col), F.col("_bm"),
-                                     m_bits, k=k))
-                .select("doc_id", F.col(text_col).alias("_ctext")))
-    else:
-        cand = (docs.where(F.col(text_col).isNotNull()
-                           & bloom_hit(F.col(text_col), bitmap, k=k))
-                .select("doc_id", F.col(text_col).alias("_ctext")))
+    if not isinstance(bitmap, DataFrame):
+        m_bits = len(bitmap) * 64
+        bitmap = docs.sparkSession.createDataFrame(
+            [(list(bitmap),)], "_bm array<bigint>")
+    elif m_bits is None:
+        raise ValueError("m_bits is required with a bitmap frame")
+    cand = (docs.where(F.col(text_col).isNotNull())
+            .crossJoin(F.broadcast(bitmap))
+            .where(bloom_hit_col(F.col(text_col), F.col("_bm"),
+                                 m_bits, k=k))
+            .select("doc_id", F.col(text_col).alias("_ctext")))
     return (cand.alias("c")
             .join(eval_texts.alias("e"),
                   F.xxhash64("c._ctext") == F.xxhash64("e._etext"))

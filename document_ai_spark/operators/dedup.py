@@ -64,38 +64,30 @@ class _CapCollector:
         """Aggregate cap metrics AFTER the plan(s) executed: total
         dropped candidates and the largest bucket seen.
 
-        Bounded: an observation whose plan never executed an action
-        (e.g. a user extract_fn that builds a capped dedup stage but
-        prunes its result) is skipped after ``timeout_sec`` with a
-        warning and counted in ``lsh_cap_unobserved`` — Observation.get
-        alone would block that caller forever. Each poll rides the JVM
-        getRowOrEmpty's internal ~100 ms wait, so a fired observation
-        (the normal case: the consuming write/collect already ran)
-        resolves on the first check."""
-        import time
+        Bounded (store.observed_value): an observation whose plan never
+        executed an action (e.g. a user extract_fn that builds a capped
+        dedup stage but prunes its result) is skipped after
+        ``timeout_sec`` with a warning and counted in
+        ``lsh_cap_unobserved`` — Observation.get alone would block that
+        caller forever. One whose subtree AQE elided (empty input)
+        counts as no drops."""
         import warnings
+
+        from ..streaming.store import observed_value
 
         dropped, biggest, unobserved = 0, 0, 0
         for obs in self.observations:
-            deadline = time.monotonic() + timeout_sec
-            fired = False
-            while True:
-                jo = getattr(obs, "_jo", None)
-                if jo is not None and jo.getRowOrEmpty().isDefined():
-                    fired = True
-                    break
-                if time.monotonic() >= deadline:
-                    break
-            if not fired:
+            n = observed_value(obs, "n_dropped_candidates", timeout_sec)
+            if not n.fired:
                 unobserved += 1
                 warnings.warn(
                     "collect_cap_metrics: a capped-LSH plan built in this "
                     "block never executed an action; its drop counts are "
                     "not included (lsh_cap_unobserved)")
                 continue
-            m = obs.get
-            dropped += int(m.get("n_dropped_candidates") or 0)
-            biggest = max(biggest, int(m.get("max_bucket_size") or 0))
+            dropped += int(n.value or 0)
+            biggest = max(biggest, int(observed_value(
+                obs, "max_bucket_size").value or 0))
         out = {"lsh_cap_dropped": dropped, "lsh_max_bucket": biggest}
         if unobserved:
             out["lsh_cap_unobserved"] = unobserved

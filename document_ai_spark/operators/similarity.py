@@ -16,12 +16,19 @@ pair expansion only ever happens inside a (band, bucket) group — no
 unbounded self-join at 10^12 vectors.
 
 IVF uses a trained codebook: deterministic seeded Lloyd iterations
-(init = first-k, few iterations, id-sampled training set) entirely as
-DataFrame ops — no driver collect; centroids stay a k-row DataFrame that
-is broadcast into the assignment join.
+(init = first-k, few iterations, id-sampled training set). Each round
+collects the k-row codebook to the driver (control-plane sized) and
+ships it in the assignment's task closure.
 
-Dot products are computed with built-in higher-order functions
-(zip_with + aggregate) — JVM-side, no Python.
+One rule per verdict: the SQL forms (_cosine_pre, _sweep_pairs_sql,
+greedy_drop_expr, batch_vs_index_dropped, _assign_window) DEFINE the
+cosine semantics, including NULL, ragged and null-element embeddings
+(zip_with pads with NULL, the CASE guard scores zero norms). The
+mapInArrow kernels are dense NumPy over clean blocks only: the JVM
+decides per group (bucket, cluster) or per row whether every item has
+a norm (item_norm is NULL exactly for null arrays and null elements)
+and one dimension, evaluates the SQL form for the rest in the same
+projection, and the kernel passes those verdicts through unchanged.
 """
 from __future__ import annotations
 
@@ -67,7 +74,7 @@ def brute_force_topk(emb: DataFrame, probe_ids, k: int = 5) -> DataFrame:
     Returns (probe_id, vec_id, cos_sim, rank) — ties broken by vec_id."""
     base = fan_out(emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))) \
-        .withColumn("nrm", item_norm(F.col("emb")))
+        .withColumn("nrm", item_norm("emb"))
     probes = base.where(F.col("vec_id").isin(list(probe_ids))).select(
         F.col("vec_id").alias("probe_id"), F.col("emb").alias("probe_emb"),
         F.col("nrm").alias("probe_nrm"))
@@ -112,7 +119,7 @@ def lsh_topk(emb: DataFrame, probe_ids, k: int = 5,
     rows = rows if rows is not None else LSH_TOPK_ROWS
     base = fan_out(emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))) \
-        .withColumn("nrm", item_norm(F.col("emb")))
+        .withColumn("nrm", item_norm("emb"))
     band_keys = F.array(*[
         F.struct(F.lit(band).alias("band"),
                  _band_bucket(F.col("emb"), band, rows).alias("bucket"))
@@ -155,7 +162,6 @@ IVF_SAMPLE_MOD = 2   # train on vec_id % MOD == 0 (deterministic sample)
 
 
 def _assign_with_cos(base: DataFrame, cents: DataFrame,
-                     impl: str | None = None,
                      crows: list | None = None) -> DataFrame:
     """Argmax-cosine centroid per vector, KEEPING the winning cos_c;
     ties to the lowest centroid_id. The ONE assignment rule shared by
@@ -163,21 +169,33 @@ def _assign_with_cos(base: DataFrame, cents: DataFrame,
     tie-break or rounding change lands once, preserving their
     batch == incremental parity contract).
 
-    Implementations (parity-tested equal): "arrow" (default) — BLAS
-    candidate scoring + JVM argmax over ~1 candidate/row; "window" —
-    the k-way broadcast cross join + row_number window, which shuffles
-    every vector k times with its embedding aboard.
+    _assign_window defines the rule; _assign_arrow computes it for a
+    clean codebook. A degenerate codebook (an empty one, a null
+    centroid, a null component or ragged dimensions) sends the whole
+    assignment to the window form — the driver decides from the k
+    codebook rows it holds anyway.
 
     ``crows``: the codebook's (centroid_id, cent) rows when the caller
     already holds them (vector_index.CodebookIndex memoizes them); the
-    arrow form then skips its collect job."""
-    if impl is None:
-        impl = EMB_SWEEP_DEFAULT
-    if impl == "arrow":
-        return _assign_arrow(base, cents, crows)
-    scored = (base.withColumn("_nrm", item_norm(F.col("emb")))
+    collect job is then skipped."""
+    if crows is None:
+        crows = cents.select("centroid_id", "cent").collect()
+    cvecs = [r["cent"] for r in crows]
+    if not cvecs or not all(v is not None and None not in v
+                            and len(v) == len(cvecs[0]) for v in cvecs):
+        return _assign_window(base, cents)
+    return _assign_arrow(base, cents, crows)
+
+
+def _assign_window(base: DataFrame, cents: DataFrame) -> DataFrame:
+    """The assignment rule as SQL: the k-way broadcast cross join scores
+    every (vector, centroid) pair with the guarded cosine, and a
+    row_number window on vec_id keeps `round(cos, 6) DESC NULLS LAST,
+    centroid_id ASC`. It shuffles every vector k times with its
+    embedding aboard."""
+    scored = (base.withColumn("_nrm", item_norm("emb"))
               .crossJoin(F.broadcast(
-                  cents.withColumn("_cnrm", item_norm(F.col("cent")))))
+                  cents.withColumn("_cnrm", item_norm("cent"))))
               .withColumn("cos_c", F.round(_cosine_pre(
                   "emb", "cent", F.col("_nrm"), F.col("_cnrm")), 6)))
     w = Window.partitionBy("vec_id").orderBy(
@@ -188,238 +206,101 @@ def _assign_with_cos(base: DataFrame, cents: DataFrame,
 
 
 def _assign_arrow(base: DataFrame, cents: DataFrame,
-                  crows: list | None = None) -> DataFrame:
-    """Vectorized argmax-cosine assignment (guide §4.2 + §2.3).
+                  crows: list) -> DataFrame:
+    """Vectorized argmax-cosine assignment against a CLEAN codebook
+    (guide §4.2 + §2.3), equal to _assign_window.
 
-    The codebook is collected to the driver (k rows — control-plane
-    sized, like the convergence scalars) and shipped in the task
-    closure. Per Arrow batch, a BLAS gram X @ C.T scores every
-    (vector, centroid) pair; per row, every centroid within 2e-6 of
-    the row's best BLAS score (margin = the 1e-6 rounding quantum the
-    JVM argmax compares at, doubled for the ~1.4e-14 BLAS-vs-fold
-    error) is emitted as a CANDIDATE with its EXACT left-fold cosine,
-    and the JVM resolves `round(cos, 6) DESC, centroid_id ASC` over
-    the ~1.05 candidates/row — so rounding and the final ordering stay
-    in the JVM, bit-equal to the window form, while the exchange
-    carries each embedding ~once instead of k times and the per-pair
-    fold work collapses into dgemm.
+    The k codebook rows ride in the task closure. Per Arrow batch, a
+    BLAS gram X @ C.T scores every (vector, centroid) pair; per row,
+    every centroid within 2e-6 of the row's best BLAS score (margin =
+    the 1e-6 rounding quantum the JVM argmax compares at, doubled for
+    the ~1.4e-14 BLAS-vs-fold error) is emitted as a CANDIDATE with its
+    EXACT left-fold cosine, and the JVM resolves `round(cos, 6) DESC,
+    centroid_id ASC` over the ~1.05 candidates/row — so rounding and
+    the final ordering stay in the JVM, while the exchange carries each
+    embedding ~once instead of k times. Zero-norm sides score 0.0; NaN
+    cosines win (Spark orders NaN above all doubles).
 
-    SQL-semantics edges mirrored exactly: zero-norm sides score 0.0
-    (the CASE guard); NaN cosines win (Spark orders NaN above all
-    doubles, desc NULLS LAST below them); vectors whose dimension
-    differs from the codebook's, or with null elements / null arrays,
-    get NULL cosines against every centroid, and the window rule then
-    picks the LOWEST centroid_id with cos_c NULL — emitted directly."""
+    The JVM marks a row clean (`ok`) when its norm is not NULL and its
+    dimension is the codebook's. A dirty row takes the CASE verdict
+    straight from its JVM norm: 0.0 against every centroid where
+    nrm * cn = 0, else NULL against all of them, which the window rule
+    resolves to the lowest centroid_id."""
+    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if crows is None:
-        crows = cents.select("centroid_id", "cent").collect()
-    if not crows:
-        return base.sparkSession.createDataFrame(
-            [], StructType(list(base.schema.fields) + [
-                StructField("centroid_id",
-                            cents.schema["centroid_id"].dataType),
-                StructField("cos_c", DoubleType())]))
     cids = [r["centroid_id"] for r in crows]
-    cvecs = [r["cent"] for r in crows]
-    min_cid = min(cids)
-    clean = all(v is not None and all(x is not None for x in v)
-                and len(v) == len(cvecs[0]) for v in cvecs)
+    CM = np.array([[float(x) for x in r["cent"]] for r in crows])
+    k, dc = CM.shape
+    cn = np.zeros(k)
+    for t in range(dc):
+        cn += CM[:, t] * CM[:, t]       # exact fold
+    cn = np.sqrt(cn)
+    imin = cids.index(min(cids))
 
-    id_type = base.schema["vec_id"].dataType
-    cid_type = cents.schema["centroid_id"].dataType
     out_schema = StructType([
-        StructField("vec_id", id_type),
+        StructField("vec_id", base.schema["vec_id"].dataType),
         StructField("emb", base.schema["emb"].dataType),
-        StructField("centroid_id", cid_type),
+        StructField("centroid_id", cents.schema["centroid_id"].dataType),
         StructField("cos_raw", DoubleType())])
 
     def assign(batches):
-        import numpy as np
         import pyarrow as pa
 
-        if not clean:
-            # Degenerate codebook (null/ragged centroids): defer to the
-            # per-row Python mirror of the zip_with semantics.
-            yield from _assign_batches_slow(batches, cids, cvecs, pa)
-            return
-        CM = np.array([[float(x) for x in v] for v in cvecs])
-        k, dc = CM.shape
-        cn = np.zeros(k)
-        for t in range(dc):
-            cn += CM[:, t] * CM[:, t]       # exact fold
-        cn = np.sqrt(cn)
-        CMT = CM.T.copy()
-
+        cid_arr = pa.array(cids)
         for batch in batches:
-            vec_col = batch.column("vec_id")
             embl = batch.column("emb")
             if isinstance(embl, pa.ChunkedArray):
                 embl = embl.combine_chunks()
-            m = len(embl)
-            if m == 0:
+            if len(embl) == 0:
                 continue
-            offs = embl.offsets.to_numpy()
-            dims = np.diff(offs)
-            has_null = embl.null_count > 0 or embl.values.null_count > 0
-            uniform = (not has_null and dims.min() == dims.max()
-                       and int(dims[0]) == dc)
-            if not uniform:
-                # Split: rows that can't score (wrong dim / nulls) get
-                # the NULL-cos verdict (lowest centroid_id); clean
-                # dc-dim rows are scored below, row by row.
-                yield from _assign_mixed(batch, embl, offs, dims, dc,
-                                         CM, cn, cids, min_cid, pa, np)
-                continue
-            X = embl.values.to_numpy(zero_copy_only=False) \
-                .reshape(m, dc)
-            nx = np.zeros(m)
-            for t in range(dc):
-                nx += X[:, t] * X[:, t]     # exact fold
-            nx = np.sqrt(nx)
-            B = X @ CMT
-            den = nx[:, None] * cn[None, :]
+            nx = batch.column("nrm").to_numpy(zero_copy_only=False)
+            ok = batch.column("ok").to_numpy(zero_copy_only=False)
+            rc, rd = np.nonzero(ok)[0], np.nonzero(~ok)[0]
+            X = embl.values.to_numpy(zero_copy_only=False)[
+                embl.offsets.to_numpy()[rc][:, None] + np.arange(dc)]
+            B = X @ CM.T
+            den = nx[rc, None] * cn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 B /= den
             np.copyto(B, 0.0, where=(den == 0.0))
             nanm = np.isnan(B)
             Bf = np.where(nanm, np.inf, B)
-            best = Bf.max(axis=1)
-            cand = nanm | (Bf >= (best - 2e-6)[:, None])
+            cand = nanm | (Bf >= (Bf.max(axis=1) - 2e-6)[:, None])
             ri, ci = np.nonzero(cand)
             acc = np.zeros(len(ri))
             for t in range(dc):
                 acc += X[ri, t] * CM[ci, t]     # exact left fold
-            dend = nx[ri] * cn[ci]
+            dend = nx[rc[ri]] * cn[ci]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / dend
             cos = np.where(dend == 0.0, 0.0, cos)
+            # dirty rows: NULL norms are NaN here and never compare 0
+            zero = (nx[rd, None] * cn[None, :]) == 0.0
+            zr, zc = np.nonzero(zero)
+            rn = rd[~zero.any(axis=1)]
+            rows = np.concatenate([rc[ri], rd[zr], rn])
             yield pa.RecordBatch.from_arrays(
-                [vec_col.take(pa.array(ri)),
-                 embl.take(pa.array(ri)),
-                 pa.array([cids[c] for c in ci]),
-                 pa.array(cos, type=pa.float64())],
+                [batch.column("vec_id").take(pa.array(rows)),
+                 embl.take(pa.array(rows)),
+                 cid_arr.take(pa.array(np.concatenate(
+                     [ci, zc, np.full(len(rn), imin)]))),
+                 pa.array(np.concatenate([cos, np.zeros(len(zr) + len(rn))]),
+                          mask=np.arange(len(rows)) >= len(ri) + len(zr),
+                          type=pa.float64())],
                 names=["vec_id", "emb", "centroid_id", "cos_raw"])
 
-    cand_df = base.select("vec_id", "emb").mapInArrow(assign, out_schema)
+    nrm = item_norm("emb")
+    cand_df = (base.select("vec_id", "emb", nrm.alias("nrm"),
+                           (nrm.isNotNull() & (F.size("emb") == dc))
+                           .alias("ok"))
+               .mapInArrow(assign, out_schema))
     w = Window.partitionBy("vec_id").orderBy(
         F.desc(F.round("cos_raw", 6)), F.asc("centroid_id"))
     return (cand_df.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("vec_id", "emb", "centroid_id",
                     F.round("cos_raw", 6).alias("cos_c")))
-
-
-def _assign_mixed(batch, embl, offs, dims, dc, CM, cn, cids, min_cid,
-                  pa, np):
-    """Per-row scoring for batches with ragged/null rows, mirroring
-    the SQL CASE order exactly: a NULL norm (null array / null
-    elements) makes every cosine NULL (lowest-centroid_id verdict);
-    a REAL zero den scores 0.0 via the CASE short-circuit EVEN when
-    the dimensions are ragged (the dot is never evaluated); only then
-    does a ragged dot become NULL."""
-    vec_col = batch.column("vec_id")
-    ri_out, cid_out, cos_out = [], [], []
-    for r in range(len(embl)):
-        row = embl[r].as_py()
-        if row is None or any(v is None for v in row):
-            # NULL norm -> NULL against every centroid.
-            ri_out.append(r)
-            cid_out.append(min_cid)
-            cos_out.append(None)
-            continue
-        x = np.array(row) if row else np.zeros(0)
-        nx = 0.0
-        for v in row:
-            nx = nx + v * v
-        nx = nx ** 0.5
-        if len(row) != dc:
-            # Ragged vs the codebook: zero-den pairs score 0.0 (CASE
-            # short-circuit); every other cosine is NULL (padded dot).
-            zero = [c for c in range(CM.shape[0])
-                    if nx * cn[c] == 0.0]
-            if zero:
-                for c in zero:
-                    ri_out.append(r)
-                    cid_out.append(cids[c])
-                    cos_out.append(0.0)
-            else:
-                ri_out.append(r)
-                cid_out.append(min_cid)
-                cos_out.append(None)
-            continue
-        # exact fold against every centroid; tiny k
-        for c in range(CM.shape[0]):
-            den = nx * cn[c]
-            if den == 0.0:
-                cos = 0.0
-            else:
-                acc = 0.0
-                for t in range(dc):
-                    acc = acc + x[t] * CM[c, t]
-                cos = acc / den
-            ri_out.append(r)
-            cid_out.append(cids[c])
-            cos_out.append(float(cos))
-    if ri_out:
-        yield pa.RecordBatch.from_arrays(
-            [vec_col.take(pa.array(ri_out)),
-             embl.take(pa.array(ri_out)),
-             pa.array(cid_out),
-             pa.array(cos_out, type=pa.float64())],
-            names=["vec_id", "emb", "centroid_id", "cos_raw"])
-
-
-def _assign_batches_slow(batches, cids, cvecs, pa):
-    """Whole-input fallback for degenerate (null/ragged) codebooks:
-    reproduce zip_with's NULL-pad cosine per (row, centroid) and let
-    the JVM argmax sort it out. Correctness-only path."""
-    for batch in batches:
-        vec_col = batch.column("vec_id")
-        embl = batch.column("emb")
-        if isinstance(embl, pa.ChunkedArray):
-            embl = embl.combine_chunks()
-        ri_out, cid_out, cos_out = [], [], []
-        for r in range(len(embl)):
-            row = embl[r].as_py()
-            for cid, cv in zip(cids, cvecs):
-                cos = _py_zipwith_cos(row, cv)
-                ri_out.append(r)
-                cid_out.append(cid)
-                cos_out.append(cos)
-        if ri_out:
-            yield pa.RecordBatch.from_arrays(
-                [vec_col.take(pa.array(ri_out)),
-                 embl.take(pa.array(ri_out)),
-                 pa.array(cid_out),
-                 pa.array(cos_out, type=pa.float64())],
-                names=["vec_id", "emb", "centroid_id", "cos_raw"])
-
-
-def _py_zipwith_cos(a, b):
-    """Python mirror of round-free _cosine_pre over possibly null /
-    ragged lists, in the SQL CASE's evaluation order: NULL norms first
-    (-> NULL), then the zero-den short-circuit (-> 0.0, even ragged),
-    then the padded dot (ragged -> NULL)."""
-    if a is None or any(v is None for v in a):
-        return None
-    if b is None or any(v is None for v in b):
-        return None
-    na = 0.0
-    for v in a:
-        na = na + v * v
-    nb = 0.0
-    for v in b:
-        nb = nb + v * v
-    den = (na ** 0.5) * (nb ** 0.5)
-    if den == 0.0:
-        return 0.0
-    if len(a) != len(b):
-        return None                     # padded dot -> NULL
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc / den
 
 
 def _assign(base: DataFrame, cents: DataFrame) -> DataFrame:
@@ -515,9 +396,9 @@ def ivf_topk(emb: DataFrame, probe_ids, k: int = 5,
               .where(F.col("rn") <= nprobe)
               .select(F.col("vec_id").alias("probe_id"), "centroid_id",
                       F.col("emb").alias("probe_emb"),
-                      item_norm(F.col("emb")).alias("probe_nrm")))
+                      item_norm("emb").alias("probe_nrm")))
     scored = (
-        assigned.withColumn("nrm", item_norm(F.col("emb")))
+        assigned.withColumn("nrm", item_norm("emb"))
         .join(F.broadcast(probes), "centroid_id")
         .where(F.col("vec_id") != F.col("probe_id"))
         .withColumn("cos_sim", F.round(_cosine_pre(
@@ -539,11 +420,6 @@ def ivf_topk(emb: DataFrame, probe_ids, k: int = 5,
 EMB_LSH_BANDS = 4
 EMB_LSH_ROWS = 8     # sign bits per band -> 256 buckets/band
 EMB_MAX_BUCKET = 4096
-# Default pair-sweep implementation: "arrow" (vectorized NumPy over
-# Arrow batches — guide §4.2) or "sql" (pure JVM HOF expression). The
-# two are bit-identical (parity-tested); "sql" remains for deployments
-# that must keep plans Python-free.
-EMB_SWEEP_DEFAULT = "arrow"
 
 
 def _band_bucket(e, band: int, rows: int):
@@ -554,11 +430,22 @@ def _band_bucket(e, band: int, rows: int):
     return b
 
 
+def _clean(field: str, *arrays: str):
+    """The JVM's routing predicate over a group's item arrays: every
+    item has a norm (item_norm is NULL exactly for null arrays and
+    null elements) and all items share one size(``field``). Groups
+    where it holds go to the NumPy kernels; the rest to the SQL form."""
+    sizes = ", ".join(f"transform({a}, x -> size(x.{field}))"
+                      for a in arrays)
+    return F.expr(" AND ".join(
+        [f"forall({a}, x -> x.nrm IS NOT NULL)" for a in arrays]
+        + [f"size(array_distinct(concat({sizes}))) = 1"]))
+
+
 def embedding_near_dups(emb: DataFrame, cos_min: float = 0.95,
                         bands: int = EMB_LSH_BANDS,
                         rows: int = EMB_LSH_ROWS,
-                        max_bucket: int = EMB_MAX_BUCKET,
-                        sweep: str | None = None) -> DataFrame:
+                        max_bucket: int = EMB_MAX_BUCKET) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded sign-LSH.
 
     `bands` bands of `rows` sign bits over disjoint dimension slices: a
@@ -577,6 +464,13 @@ def embedding_near_dups(emb: DataFrame, cos_min: float = 0.95,
     whose first-collision band was truncated is dropped even if
     co-present later; caps engage only on adversarial buckets and the
     drop is observed."""
+    return _sweep_pairs(_near_dup_groups(emb, bands, rows, max_bucket),
+                        cos_min)
+
+
+def _near_dup_groups(emb: DataFrame, bands: int, rows: int,
+                     max_bucket: int) -> DataFrame:
+    """embedding_near_dups' capped (band, bucket, items) groups."""
     base = fan_out(emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")))
     bucket_vec = F.array(*[
@@ -586,48 +480,57 @@ def embedding_near_dups(emb: DataFrame, cos_min: float = 0.95,
                  F.element_at("bks", band + 1).alias("bucket"))
         for band in range(bands)])
     # Per-item L2 norm computed ONCE map-side (round 6, guide §1.2): the
-    # sweep below is O(pairs) and the old inline _cosine re-folded both
+    # sweep is O(pairs) and the old inline _cosine re-folded both
     # norms per PAIR — 3 array folds/pair down to 1. Same sqrt(fold)
     # expression, so rounded cosines are bit-identical.
     banded = (base.withColumn("bks", bucket_vec)
-              .withColumn("nrm", item_norm(F.col("emb")))
+              .withColumn("nrm", item_norm("emb"))
               .select("vec_id", "emb", "bks", "nrm",
                       F.explode(band_keys).alias("bk"))
               .select("vec_id", "emb", "bks", "nrm", "bk.band", "bk.bucket"))
+    return _pair_groups(banded, max_bucket)
+
+
+def _pair_groups(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """(band, bucket, items) for every (band, bucket) of ``banded``
+    (vec_id, emb, bks, nrm, band, bucket) holding two or more rows, the
+    items vec_id-sorted and capped at ``max_bucket`` (observed) — the
+    input of the pair sweeps, shared with vector_index.EmbeddingIndex."""
     grouped = (
         banded.groupBy("band", "bucket")
         .agg(F.collect_list(F.struct("vec_id", "emb", "bks", "nrm"))
              .alias("items"))
         .where(F.size("items") > 1)
     )
-    grouped = _cap_bucket_items(grouped, max_bucket)
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep == "arrow":
-        return _sweep_pairs_arrow(grouped, cos_min)
-    return _sweep_pairs_sql(grouped, cos_min)
+    return _cap_bucket_items(grouped, max_bucket)
 
 
-def _sweep_pairs_sql(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Per-bucket pair sweep as a pure JVM higher-order expression.
+def _first_band_cond(bks_x: str, bks_y: str) -> str:
+    """SQL condition: the current `band` is the first whose buckets
+    agree (bucket equality <=> sign-slice agreement) — the shuffle-free
+    multi-band pair dedup of the sweeps and of EmbeddingIndex's
+    batch-vs-index join."""
+    return ("CASE WHEN band = 0 THEN true ELSE NOT exists("
+            f"  slice(zip_with({bks_x}, {bks_y}, (a, c) -> a = c), "
+            "        1, band), t -> t) END")
 
-    Round-6 sweep shape (guide §1.2/§2.3): score and threshold INSIDE
-    the per-bucket HOF — the old form materialized a struct carrying
-    BOTH full embeddings for every candidate pair, exploded all of
-    them, and only then scored and filtered; now only surviving
-    (id_a, id_b, cos_sim) triples are ever materialized/exploded.
-    Self-pair guard (duplicate vec_id input rows) lives in the
-    candidate filter; cosine/round/threshold expressions are the same
-    ops in the same order as round 5, so output rows are bit-identical."""
-    first_band = (
-        "CASE WHEN band = 0 THEN true ELSE NOT exists("
-        "  slice(zip_with(x.bks, y.bks, (a, c) -> a = c), 1, band), "
-        "  t -> t) END"
-    )
-    pair_expr = (
+
+def _pair_array_sql(cos_min: float) -> str:
+    """The per-bucket pair sweep as one JVM higher-order expression over
+    a capped, vec_id-sorted `items` array: the array of
+    struct(id_a, id_b, cos_sim) for every upper-triangle pair that
+    passes the self-pair guard (duplicate vec_id input rows) and the
+    first-band rule and scores round(cos, 6) >= cos_min. Only surviving
+    triples are ever materialized (round 6, guide §1.2/§2.3). A NULL
+    cosine (ragged dims, null elements) fails the filter; a zero-norm
+    pair scores 0.0 even against a ragged partner (the CASE
+    short-circuits before the dot); NaN passes (Spark orders NaN above
+    all doubles)."""
+    return (
         "flatten(transform(items, (x, i) -> "
         "  filter(transform(filter(slice(items, i + 2, size(items)), "
-        f"           y -> x.vec_id != y.vec_id AND ({first_band})), y -> "
+        "           y -> x.vec_id != y.vec_id AND "
+        f"               ({_first_band_cond('x.bks', 'y.bks')})), y -> "
         "     struct(x.vec_id AS id_a, y.vec_id AS id_b, "
         "            round(CASE WHEN x.nrm * y.nrm = 0.0D THEN 0.0D ELSE "
         "              aggregate(zip_with(x.emb, y.emb, (a, b) -> a * b), "
@@ -635,11 +538,17 @@ def _sweep_pairs_sql(grouped: DataFrame, cos_min: float) -> DataFrame:
         "              / (x.nrm * y.nrm) END, 6) AS cos_sim)), "
         f"    p -> p.cos_sim >= {float(cos_min)!r})))"
     )
-    return (grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
+
+
+def _sweep_pairs_sql(grouped: DataFrame, cos_min: float) -> DataFrame:
+    """The pair sweep's SQL form: (id_a, id_b, cos_sim) exploded from
+    _pair_array_sql — the definition _sweep_pairs is tested against."""
+    return (grouped.select(F.explode(F.expr(_pair_array_sql(cos_min)))
+                           .alias("p"))
             .select("p.*"))
 
 
-# Safety margin for the Arrow sweep's raw-cosine pre-filter: JVM
+# Safety margin for the Arrow kernels' raw-cosine pre-filter: JVM
 # round(x, 6) moves x by at most 5e-7 (+ sub-ulp decimal->double
 # conversion error), so no raw cosine below cos_min - 1e-6 can round to
 # >= cos_min. The margin only controls how many NON-survivors cross the
@@ -686,29 +595,29 @@ def _cand_cos_exact(np, X, nr, floor, extra_mask=None):
     return ii, jj, acc / (nr[ii] * nr[jj])
 
 
-def _sweep_pairs_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Vectorized per-bucket pair sweep: mapInArrow + NumPy (guide §4.2
-    "hand whole batches to vectorized native libraries").
+def _sweep_pairs(grouped: DataFrame, cos_min: float) -> DataFrame:
+    """The per-bucket pair sweep: mapInArrow + NumPy over clean buckets
+    (guide §4.2 "hand whole batches to vectorized native libraries"),
+    equal to _sweep_pairs_sql (parity-tested in
+    tests/test_similarity_edges.py).
 
-    Bit-parity contract with _sweep_pairs_sql (parity-tested in
-    tests/test_similarity_edges.py):
+    A bucket holding a null, null-element or ragged vector (_clean is
+    false) is answered by _pair_array_sql in the projection that feeds
+    the kernel, and the kernel passes those pairs through. For a clean
+    bucket:
       * products and the dot-product accumulation run in IEEE float64
-        in the SAME order as the JVM fold (one outer-product
-        multiply-add per dimension, ascending — each step is one
-        rounded multiply and one rounded add, exactly zip_with +
+        in the SAME order as the JVM fold (one rounded multiply and
+        one rounded add per dimension, ascending — zip_with +
         aggregate's left fold);
       * norms are NOT recomputed — the JVM-computed `nrm` field is
         used, and den = nrm_a * nrm_b / division are single correctly-
         rounded IEEE ops in both runtimes;
       * the final round-half-up + `>= cos_min` run in the JVM on the
-        surviving RAW cosines (no Python rounding anywhere); the NumPy
-        side pre-filters with a conservative margin (>= cos_min - 1e-6,
-        or NaN — Spark orders NaN above all doubles so NaN cosines
-        survive the JVM filter, and the pre-filter must not drop them;
-        zero-norm pairs score exactly 0.0 as in _cosine);
-      * pairs whose cosine would be NULL JVM-side (ragged dimensions —
-        zip_with pads with null — or null vector elements) are dropped,
-        which is exactly what the JVM's `NULL >= cos_min` filter does.
+        surviving RAW cosines (no Python rounding anywhere; rounding
+        the SQL form's already-rounded cosines again is the identity);
+        the NumPy side pre-filters with a conservative margin
+        (>= cos_min - 1e-6, or NaN — NaN cosines survive the JVM
+        filter; zero-norm pairs score exactly 0.0 as in _cosine).
     Candidate semantics (upper-triangle of the vec_id-sorted capped
     bucket, self-pair guard, first-collision-band dedup over `bks`) are
     identical. Cost: the O(n^2 d) sweep runs as ~d vectorized
@@ -727,8 +636,18 @@ def _sweep_pairs_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
     def sweep(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         for batch in batches:
+            clean = batch.column("clean").to_numpy(zero_copy_only=False)
+            if not clean.all():
+                sql = pc.filter(batch.column("sql_pairs"),
+                                pa.array(~clean)).flatten()
+                if len(sql):
+                    yield pa.RecordBatch.from_arrays(
+                        [sql.field("id_a"), sql.field("id_b"),
+                         sql.field("cos_sim")],
+                        names=["id_a", "id_b", "cos_raw"])
             bands_col = batch.column("band").to_numpy(zero_copy_only=False)
             items = batch.column("items")
             if isinstance(items, pa.ChunkedArray):
@@ -739,39 +658,18 @@ def _sweep_pairs_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
             nrms = struct.field("nrm").to_numpy(zero_copy_only=False)
             embl = struct.field("emb")
             emb_offs = embl.offsets.to_numpy()
+            emb_vals = embl.values.to_numpy(zero_copy_only=False)
             bksl = struct.field("bks")
             bks_offs = bksl.offsets.to_numpy()
             bks_vals = bksl.values.to_numpy(zero_copy_only=False)
-            emb_has_null = (embl.null_count > 0
-                            or embl.values.null_count > 0)
-            if not emb_has_null:
-                emb_vals = embl.values.to_numpy(zero_copy_only=False)
             acc_a, acc_b, acc_c = [], [], []
-            for r in range(len(items)):
+            for r in np.nonzero(clean)[0]:
                 i0, i1 = offs[r], offs[r + 1]
                 n = i1 - i0
-                if n < 2:
-                    continue
                 ids = vec_ids[i0:i1]
                 nr = nrms[i0:i1]
-                e0, e1 = emb_offs[i0], emb_offs[i1]
-                dims = np.diff(emb_offs[i0:i1 + 1])
-                # Ragged dims or null elements -> NULL cosines JVM-side
-                # -> dropped by the `>= cos_min` filter; mirror by
-                # emitting nothing for the affected pairs. Mixed-dim
-                # buckets keep their uniform-dim majority via the
-                # general (rare) per-pair path below.
-                uniform = dims.min() == dims.max()
-                if not uniform or emb_has_null:
-                    _sweep_bucket_slow(embl, i0, i1, ids, nr, bks_vals,
-                                       bks_offs, bands_col[r], thr,
-                                       acc_a, acc_b, acc_c)
-                    continue
-                d = int(dims[0])
-                if d == 0:
-                    X = np.zeros((n, 0))
-                else:
-                    X = emb_vals[e0:e1].reshape(n, d)
+                d = int(emb_offs[i0 + 1] - emb_offs[i0])
+                X = emb_vals[emb_offs[i0]:emb_offs[i1]].reshape(n, d)
                 # Candidate mask: self-pair guard + first-collision-
                 # band rule, applied BEFORE any cosine work.
                 pm = ids[:, None] != ids[None, :]
@@ -805,55 +703,14 @@ def _sweep_pairs_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
                      pa.array(np.concatenate(acc_c), type=pa.float64())],
                     names=["id_a", "id_b", "cos_raw"])
 
-    pairs = grouped.select("band", "items").mapInArrow(sweep, out_schema)
-    # Exact JVM round + threshold on survivors only — identical
-    # expressions to the SQL sweep, so results are bit-identical.
+    clean = _clean("emb", "items")
+    pairs = (grouped.select("band", "items", clean.alias("clean"),
+                            F.when(~clean, F.expr(_pair_array_sql(cos_min)))
+                            .alias("sql_pairs"))
+             .mapInArrow(sweep, out_schema))
     return (pairs.withColumn("cos_sim", F.round("cos_raw", 6))
             .where(F.col("cos_sim") >= cos_min)
             .select("id_a", "id_b", "cos_sim"))
-
-
-def _sweep_bucket_slow(embl, i0, i1, ids, nr, bks_vals, bks_offs, band,
-                       thr, acc_a, acc_b, acc_c):
-    """Per-pair fallback for buckets with ragged dimensions or null
-    vector elements (adversarial inputs only — never the hot path).
-    Reproduces zip_with's pad-with-null semantics: any ragged pair or
-    null product makes the JVM cosine NULL, which the `>= cos_min`
-    filter drops — so those pairs are simply not emitted."""
-    import numpy as np
-
-    n = i1 - i0
-    pyrows = [embl[int(i0) + j].as_py() for j in range(n)]
-    band = int(band)
-    for j in range(1, n):
-        for i in range(j):
-            if ids[i] == ids[j]:
-                continue
-            if band > 0:
-                bi = bks_vals[bks_offs[i0 + i]:bks_offs[i0 + i] + band]
-                bj = bks_vals[bks_offs[i0 + j]:bks_offs[i0 + j] + band]
-                if (bi == bj).any():
-                    continue
-            den = nr[i] * nr[j]
-            if den == 0.0:
-                # Zero-norm guard fires BEFORE the dot product JVM-side
-                # (CASE short-circuit), so a zero-norm side yields 0.0
-                # even against a ragged/NULL-padded partner.
-                cos = 0.0
-            else:
-                a, b = pyrows[i], pyrows[j]
-                if a is None or b is None or len(a) != len(b) \
-                        or any(v is None for v in a) \
-                        or any(v is None for v in b):
-                    continue        # NULL cosine JVM-side -> dropped
-                acc = 0.0
-                for x, y in zip(a, b):
-                    acc = acc + x * y
-                cos = acc / den
-            if cos >= thr or np.isnan(cos):
-                acc_a.append(np.array([ids[i]]))
-                acc_b.append(np.array([ids[j]]))
-                acc_c.append(np.array([cos]))
 
 
 # ---------------------------------------------------------------------------
@@ -864,15 +721,19 @@ SEM_MAX_CLUSTER = 4096   # per-cluster item cap (observed drops, as LSH)
 SEM_MEAN_CLUSTER = 2500  # auto-k target mean (sits well under the cap)
 
 
-def item_norm(emb_col):
-    """Per-item L2 norm carried INSIDE the cluster items struct (field
-    ``nrm``): the greedy sweep then computes each norm once per ITEM
-    instead of once per PAIR (the sweep is O(n^2) pairs), and the
-    zero-norm guard below costs one multiply instead of two extra
-    aggregate folds. sqrt-then-multiply matches the old inline order,
-    so rounded cosines are bit-identical."""
-    return F.sqrt(F.aggregate(emb_col, F.lit(0.0),
-                              lambda acc, v: acc + v * v))
+def item_norm(emb: str):
+    """Per-item L2 norm of array column ``emb``, carried INSIDE the
+    cluster items struct (field ``nrm``): the greedy sweep then
+    computes each norm once per ITEM instead of once per PAIR (the
+    sweep is O(n^2) pairs), and the zero-norm guard below costs one
+    multiply instead of two extra aggregate folds. sqrt-then-multiply
+    matches the old inline order, so rounded cosines are bit-identical.
+    NULL exactly for a null array or one with a null element.
+
+    Written as SQL text: a Python-lambda higher-order Column costs
+    ~12 ms of py4j calls to build on the driver, the parsed text
+    ~0.3 ms; the expression is the same."""
+    return F.expr(f"sqrt(aggregate({emb}, 0D, (acc, v) -> acc + v * v))")
 
 
 def greedy_drop_expr(cos_min: float):
@@ -880,14 +741,18 @@ def greedy_drop_expr(cos_min: float):
     array<struct<c,v,e,nrm>> column: per item y at 0-based position j,
     dropped iff ANY of the j earlier items is >= cos_min
     cosine-similar. exists() short-circuits; the first item of every
-    cluster is always kept (empty slice). semdedup's "sql" sweep, and
-    the reference the Arrow kernels are parity-tested against.
-    Zero-norm guard: a raw 0/0 cosine is
-    NaN, which Spark orders ABOVE every real number — unguarded,
+    cluster is always kept (empty slice). The SQL form of the intra
+    verdicts of batch_and_index_verdicts. Zero-norm guard: a raw 0/0
+    cosine is NaN, which Spark orders ABOVE every real number — unguarded,
     NaN >= cos_min is TRUE and a zero (empty-doc) vector would drop
     against anything; guarded, zero vectors match nothing (the
     _cosine convention)."""
-    return F.expr(
+    return F.expr(_greedy_drop_sql(cos_min))
+
+
+def _greedy_drop_sql(cos_min: float) -> str:
+    """greedy_drop_expr's SQL text."""
+    return (
         "transform(items, (y, j) -> struct("
         "  y.v AS vec_id, "
         "  exists(slice(items, 1, j), x -> "
@@ -910,9 +775,9 @@ def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
     (ragged/null vectors) fail the filter -> keep; NaN drops (Spark
     orders NaN above all doubles); a zero-norm pair scores 0.0 via the
     CASE short-circuit and drops only when cos_min <= 0."""
-    cross = (new.alias("n").withColumn("_nn", item_norm(F.col("emb")))
+    cross = (new.alias("n").withColumn("_nn", item_norm("emb"))
              .join(idx.alias("o")
-                   .withColumn("_on", item_norm(F.col("emb"))),
+                   .withColumn("_on", item_norm("emb")),
                    ["centroid_id"])
              .where(F.round(_cosine_pre(F.col("n.emb"), F.col("o.emb"),
                                         F.col("_nn"), F.col("_on")), 6)
@@ -923,32 +788,24 @@ def batch_vs_index_dropped(new: DataFrame, idx: DataFrame,
 class _ItemViews:
     """NumPy views over an Arrow ``list<struct<..., e, nrm>>`` column:
     per-row item offsets, the item structs, the embedding list array
-    and its offsets, the JVM-computed norms, and — when no vector or
-    element is null — the flat embedding values."""
+    and its offsets, the JVM-computed norms and the flat embedding
+    values (NaN where an element is null: only clean blocks read them)."""
 
     def __init__(self, np, pa, col):
         if isinstance(col, pa.ChunkedArray):
             col = col.combine_chunks()
         self.offs = col.offsets.to_numpy()
         self.struct = col.values
-        self.embl = self.struct.field("e")
-        self.emb_offs = self.embl.offsets.to_numpy()
-        nrm = self.struct.field("nrm")
-        self.nrm = nrm.to_numpy(zero_copy_only=False)
-        self.dirty = (self.embl.null_count > 0
-                      or self.embl.values.null_count > 0
-                      or nrm.null_count > 0)
-        self.vals = None if self.dirty else \
-            self.embl.values.to_numpy(zero_copy_only=False)
+        embl = self.struct.field("e")
+        self.emb_offs = embl.offsets.to_numpy()
+        self.nrm = self.struct.field("nrm").to_numpy(zero_copy_only=False)
+        self.vals = embl.values.to_numpy(zero_copy_only=False)
 
-    def dims(self, np, i0, n):
-        return np.diff(self.emb_offs[i0:i0 + n + 1])
-
-    def matrix(self, np, i0, n, d):
-        if d == 0:
-            return np.zeros((n, 0))
-        return self.vals[self.emb_offs[i0]:self.emb_offs[i0 + n]] \
-            .reshape(n, d)
+    def matrix(self, i0, n):
+        """The n x d matrix of the clean block of n items at i0."""
+        e0 = self.emb_offs[i0]
+        d = int(self.emb_offs[i0 + 1] - e0)
+        return self.vals[e0:self.emb_offs[i0 + n]].reshape(n, d)
 
 
 def _fold_verdicts(np, n, jj, cos, lo, hi):
@@ -968,24 +825,26 @@ def _fold_verdicts(np, n, jj, cos, lo, hi):
     return dd, amb
 
 
+def _greedy_block(np, V, i0, n, lo, hi):
+    """Greedy SemDeDup verdicts for the n keep-ordered items of the
+    clean block of ``V`` at i0: item j is judged against every earlier
+    item. Zero-norm pairs are excluded by the kernel — exactly the
+    CASE -> false rule of greedy_drop_expr."""
+    ii, jj, cos = _cand_cos_exact(np, V.matrix(i0, n), V.nrm[i0:i0 + n],
+                                  lo)
+    return _fold_verdicts(np, n, jj, cos, lo, hi)
+
+
 def _rect_block(np, N, a0, m, O, b0, p, lo, hi):
     """Batch-vs-index verdicts for the m items of ``N`` at a0 against
-    the p items of ``O`` at b0 (ANY over O), under
-    batch_vs_index_dropped's rule: dgemm candidates at 1e-9 slack
-    (_cand_cos_exact's discipline), the bit-exact left-fold cosine for
-    candidates only, zero-norm pairs scored 0.0. Null/ragged vectors
-    take the per-pair fallback."""
+    the p items of ``O`` at b0 (ANY over O), one clean block of one
+    dimension, under batch_vs_index_dropped's rule: dgemm candidates at
+    1e-9 slack (_cand_cos_exact's discipline), the bit-exact left-fold
+    cosine for candidates only, zero-norm pairs scored 0.0."""
     nx, ny = N.nrm[a0:a0 + m], O.nrm[b0:b0 + p]
-    ndims, odims = N.dims(np, a0, m), O.dims(np, b0, p)
-    if N.dirty or O.dirty or ndims.min() != ndims.max() \
-            or odims.min() != odims.max() or ndims[0] != odims[0]:
-        dd, amb = _rect_slow(np, N.embl, O.embl, a0, m, b0, p, nx, ny,
-                             lo, hi)
-        return np.asarray(dd, dtype=bool), amb
-    d = int(ndims[0])
-    X, Y = N.matrix(np, a0, m, d), O.matrix(np, b0, p, d)
+    X, Y = N.matrix(a0, m), O.matrix(b0, p)
     den = nx[:, None] * ny[None, :]
-    B = X @ Y.T if d else np.zeros((m, p))
+    B = X @ Y.T
     with np.errstate(divide="ignore", invalid="ignore"):
         B /= den
     np.copyto(B, 0.0, where=(den == 0.0))
@@ -993,7 +852,7 @@ def _rect_block(np, N, a0, m, O, b0, p, lo, hi):
     cos = np.zeros(0)
     if len(ri):
         acc = np.zeros(len(ri))
-        for t in range(d):
+        for t in range(X.shape[1]):
             acc += X[ri, t] * Y[ci, t]          # exact left fold
         dend = nx[ri] * ny[ci]
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -1002,28 +861,46 @@ def _rect_block(np, N, a0, m, O, b0, p, lo, hi):
     return _fold_verdicts(np, m, ri, cos, lo, hi)
 
 
+def _cross_drop_sql(cos_min: float) -> str:
+    """batch_vs_index_dropped's filter as a higher-order expression:
+    per `items` entry y, whether ANY `o_items` entry scores
+    round(cos, 6) >= cos_min against it (NULL when only NULL cosines
+    are found, which the caller reads as keep)."""
+    return (
+        "transform(items, y -> exists(o_items, o -> "
+        "  round(CASE WHEN y.nrm * o.nrm = 0.0D THEN 0.0D ELSE "
+        "    aggregate(zip_with(y.e, o.e, (a, b) -> a * b), "
+        "              cast(0.0 as double), (acc, p) -> acc + p) "
+        f"    / (y.nrm * o.nrm) END, 6) >= {float(cos_min)!r}))")
+
+
 def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
                              cos_min: float,
                              max_cluster: int) -> DataFrame:
     """(vec_id, centroid_id, cos_c, sem_keep) for every row of ``new``
-    (vec_id, emb, centroid_id, cos_c) — the incremental SemanticIndex
-    verdicts in ONE grouping per centroid_id and ONE mapInArrow pass.
+    (vec_id, emb, centroid_id, cos_c) — the SemDeDup verdicts (semdedup,
+    and the incremental SemanticIndex) in ONE grouping per centroid_id
+    and ONE mapInArrow pass.
 
-    ``idx``: index rows of the clusters ``new`` touches (None: empty
+    ``idx``: index rows of the clusters ``new`` touches (None: no
     index); each cluster is capped here to its ``max_cluster`` lowest
     vec_ids. A batch vector is dropped iff
       * intra: it is among its cluster's first ``max_cluster`` batch
         items in keep order (cos_c ASC, vec_id ASC) and an earlier one
-        of them scores round(cos, 6) >= cos_min — greedy_verdicts'
+        of them scores round(cos, 6) >= cos_min — greedy_drop_expr's
         rule: zero-norm pairs are false, NULL cosines keep, NaN drops;
+        items beyond the cap keep unless the cross leg drops them, and
         the cap is observed as lsh_cap (_cap_bucket_items' metric);
       * cross: it scores round(cos, 6) >= cos_min against ANY capped
         index row of its cluster — batch_vs_index_dropped's rule:
         zero-norm pairs score 0.0, NULL cosines keep, NaN drops. Every
         batch vector is judged, also those beyond the intra cap.
-    Both legs run semdedup's per-cluster kernels (_greedy_block,
-    _rect_block) and return definite verdicts plus the raw cosines in
-    the ambiguous band; the JVM applies the one round:
+    A cluster holding a null, null-element or ragged vector on either
+    side (_clean is false) is answered by those SQL forms in the
+    projection that feeds the kernel; the kernel passes the verdicts
+    through. Clean clusters run _greedy_block and _rect_block, which
+    return definite verdicts plus the raw cosines in the ambiguous
+    band; the JVM applies the one round:
     sem_keep = NOT (definite OR exists(amb, round(c, 6) >= cos_min)).
     No index x index cosine is computed."""
     from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
@@ -1032,7 +909,7 @@ def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
     def item(side, c):
         return F.struct(F.lit(side).alias("s"), c.alias("c"),
                         F.col("vec_id").alias("v"), F.col("emb").alias("e"),
-                        item_norm(F.col("emb")).alias("nrm")).alias("it")
+                        item_norm("emb").alias("nrm")).alias("it")
 
     rows = new.select("centroid_id", item(0, F.col("cos_c")))
     if idx is not None:
@@ -1045,16 +922,25 @@ def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
     # batch items by (cos_c ASC, vec_id ASC): the keep order.
     grouped = (rows.groupBy("centroid_id")
                .agg(F.collect_list("it").alias("_all"))
-               .select("centroid_id",
-                       F.array_sort(F.filter("_all", lambda x: x["s"] == 0))
-                       .alias("items"),
-                       F.filter("_all", lambda x: x["s"] == 1)
-                       .alias("o_items")))
+               .selectExpr("centroid_id",
+                           "array_sort(filter(_all, x -> x.s = 0)) AS items",
+                           "filter(_all, x -> x.s = 1) AS o_items"))
     grouped = _observe_cap(grouped, max_cluster)
+    cap = int(max_cluster)
+    clean = _clean("e", "items", "o_items")
+    # The intra SQL verdicts judge the capped prefix only: the
+    # one-element transform binds greedy_drop_expr's `items` to it.
+    sql_drop = F.expr(
+        f"zip_with({_cross_drop_sql(cos_min)}, "
+        f"transform(transform(array(slice(items, 1, {cap})), "
+        f"items -> {_greedy_drop_sql(cos_min)})[0], r -> r.dropped), "
+        "(c, i) -> coalesce(c, false) OR coalesce(i, false))")
+    routed = grouped.select("centroid_id", "items", "o_items",
+                            clean.alias("clean"),
+                            F.when(~clean, sql_drop).alias("sql_drop"))
 
     lo = float(cos_min) - _SWEEP_MARGIN
     hi = float(cos_min) + _SWEEP_MARGIN
-    cap = int(max_cluster)
     out_schema = StructType([
         StructField("vec_id", new.schema["vec_id"].dataType),
         StructField("centroid_id", new.schema["centroid_id"].dataType),
@@ -1069,23 +955,32 @@ def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
         for batch in batches:
             N = _ItemViews(np, pa, batch.column("items"))
             O = _ItemViews(np, pa, batch.column("o_items"))
+            clean = batch.column("clean").to_numpy(zero_copy_only=False)
+            sql = batch.column("sql_drop")
+            sql_offs = sql.offsets.to_numpy()
+            sql_vals = sql.values.to_numpy(zero_copy_only=False)
             pos, grp, out_def, out_amb = [], [], [], []
             for r in range(len(N.offs) - 1):
                 a0, m = int(N.offs[r]), int(N.offs[r + 1] - N.offs[r])
                 if m == 0:
                     continue
-                nc = min(m, cap)
-                dd = np.zeros(m, dtype=bool)
                 amb = [[] for _ in range(m)]
-                if nc:
-                    dd[:nc], amb[:nc] = _greedy_block(np, N, a0, nc,
-                                                      lo, hi)
-                b0, p = int(O.offs[r]), int(O.offs[r + 1] - O.offs[r])
-                if p:
-                    dc, ac = _rect_block(np, N, a0, m, O, b0, p, lo, hi)
-                    dd |= dc
-                    amb = [[] if dd[j] else amb[j] + ac[j]
-                           for j in range(m)]
+                if not clean[r]:
+                    dd = sql_vals[sql_offs[r]:sql_offs[r + 1]]
+                else:
+                    nc = min(m, cap)
+                    dd = np.zeros(m, dtype=bool)
+                    if nc:
+                        dd[:nc], amb[:nc] = _greedy_block(np, N, a0, nc,
+                                                          lo, hi)
+                    b0 = int(O.offs[r])
+                    p = int(O.offs[r + 1]) - b0
+                    if p:
+                        dc, ac = _rect_block(np, N, a0, m, O, b0, p,
+                                             lo, hi)
+                        dd |= dc
+                        amb = [[] if dd[j] else amb[j] + ac[j]
+                               for j in range(m)]
                 pos.append(np.arange(a0, a0 + m))
                 grp.append(np.full(m, r))
                 out_def.append(dd)
@@ -1102,196 +997,17 @@ def batch_and_index_verdicts(new: DataFrame, idx: DataFrame | None,
                     names=["vec_id", "centroid_id", "cos_c",
                            "dropped_def", "amb"])
 
-    judged = grouped.select("centroid_id", "items", "o_items") \
-        .mapInArrow(judge, out_schema)
-    return judged.select(
+    judged = routed.mapInArrow(judge, out_schema)
+    return judged.selectExpr(
         "vec_id", "centroid_id", "cos_c",
-        (~(F.col("dropped_def")
-           | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min))))
-        .alias("sem_keep"))
-
-
-def _rect_slow(np, nel, oel, a0, m, b0, p, nx, ny, lo, hi):
-    """Per-pair fallback of the rectangular kernel (null/ragged
-    vectors), in the SQL CASE order: real zero den -> 0.0 (even
-    ragged); NULL norm or padded dot -> NULL (keep); NaN -> drop."""
-    import math
-
-    nrows = [nel[a0 + j].as_py() for j in range(m)]
-    orows = [oel[b0 + j].as_py() for j in range(p)]
-    dd = [False] * m
-    amb = [[] for _ in range(m)]
-    for j in range(m):
-        for i in range(p):
-            cos = _case_cos(nrows[j], orows[i], nx[j] * ny[i])
-            if cos is None:
-                continue
-            if math.isnan(cos) or cos >= hi:
-                dd[j] = True
-                break
-            if lo <= cos < hi:
-                amb[j].append(cos)
-        if dd[j]:
-            amb[j] = []
-    return dd, amb
-
-
-def _case_cos(a, b, den):
-    """round-free _cosine over possibly null/ragged lists in the SQL
-    CASE's order: den == 0.0 (a REAL zero) short-circuits to 0.0
-    before the dot; NULL norms (NaN den from null elements is caught
-    by the null checks) or a padded dot give None."""
-    import math
-
-    if isinstance(den, float) and den == 0.0 \
-            and a is not None and b is not None \
-            and all(v is not None for v in a) \
-            and all(v is not None for v in b):
-        return 0.0
-    if a is None or b is None or len(a) != len(b) \
-            or any(v is None for v in a) or any(v is None for v in b):
-        return None
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc / den
-
-
-def greedy_verdicts(grouped: DataFrame, cos_min: float,
-                    sweep: str | None = None) -> DataFrame:
-    """(vec_id, dropped) for every item of every sorted cluster in
-    ``grouped`` (the capped `items: array<struct<c, v, e, nrm>>` frame)
-    under the SemDeDup greedy rule — item j is dropped iff ANY earlier
-    item scores round(cos, 6) >= cos_min against it.
-
-    semdedup's seam; its per-cluster kernel (_greedy_block) is also the
-    intra leg of the incremental SemanticIndex's one-pass verdicts
-    (batch_and_index_verdicts), so their batch == incremental parity
-    holds by construction. `sweep` picks the implementation: "arrow"
-    (vectorized NumPy, default) or "sql" (the pure-JVM
-    greedy_drop_expr). Verdict equivalence note: the SQL exists() can
-    return NULL for a pair whose cosine is NULL (null elements / ragged
-    dims) — consumers coalesce NULL to false/keep, and the Arrow path
-    emits false directly; the parity test compares post-coalesce
-    semantics."""
-    if sweep is None:
-        sweep = EMB_SWEEP_DEFAULT
-    if sweep == "arrow":
-        return _greedy_arrow(grouped, cos_min)
-    return (grouped.select(F.explode(greedy_drop_expr(cos_min)).alias("r"))
-            .select(F.col("r.vec_id").alias("vec_id"),
-                    F.col("r.dropped").alias("dropped")))
-
-
-def _greedy_arrow(grouped: DataFrame, cos_min: float) -> DataFrame:
-    """Vectorized greedy sweep: mapInArrow + NumPy (guide §4.2), same
-    kernel discipline as _sweep_pairs_arrow — exact left-fold dot
-    products, JVM-computed norms reused, NO Python rounding anywhere.
-
-    Round-exactness without a Python round: each item returns a
-    DEFINITE verdict when every relevant cosine is at least 1e-6 away
-    from cos_min (round(x, 6) moves x by < 1e-6, so the comparison is
-    decided), plus an `amb` array of the raw cosines inside the
-    ambiguous band (width 2e-6 — empty for any real corpus). The final
-    verdict is `definite OR exists(amb, c -> round(c, 6) >= cos_min)`,
-    evaluated in the JVM — bit-exactly the SQL sweep's comparison.
-    Pairs the SQL CASE scores as false (zero-norm sides) or NULL
-    (null/ragged vectors — see greedy_verdicts) contribute nothing;
-    NaN cosines drop (Spark orders NaN above all doubles)."""
-    from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                                   StructField, StructType)
-
-    lo = float(cos_min) - _SWEEP_MARGIN
-    hi = float(cos_min) + _SWEEP_MARGIN
-    id_type = grouped.schema["items"].dataType.elementType["v"].dataType
-    out_schema = StructType([
-        StructField("vec_id", id_type),
-        StructField("dropped_def", BooleanType()),
-        StructField("amb", ArrayType(DoubleType()))])
-
-    def sweep(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            V = _ItemViews(np, pa, batch.column("items"))
-            pos, out_def, out_amb = [], [], []
-            for r in range(len(V.offs) - 1):
-                i0, n = int(V.offs[r]), int(V.offs[r + 1] - V.offs[r])
-                if n == 0:
-                    continue
-                dd, amb = _greedy_block(np, V, i0, n, lo, hi)
-                pos.append(np.arange(i0, i0 + n))
-                out_def.append(dd)
-                out_amb.extend(amb)
-            if pos:
-                yield pa.RecordBatch.from_arrays(
-                    [V.struct.field("v").take(pa.array(np.concatenate(pos))),
-                     pa.array(np.concatenate(out_def), type=pa.bool_()),
-                     pa.array(out_amb, type=pa.list_(pa.float64()))],
-                    names=["vec_id", "dropped_def", "amb"])
-
-    judged = grouped.select("items").mapInArrow(sweep, out_schema)
-    return judged.select(
-        "vec_id",
-        (F.col("dropped_def")
-         | F.exists("amb", lambda c: F.round(c, 6) >= F.lit(cos_min)))
-        .alias("dropped"))
-
-
-def _greedy_block(np, V, i0, n, lo, hi):
-    """Greedy SemDeDup verdicts for the n keep-ordered items of ``V`` at
-    i0: item j is judged against every earlier item. Zero-norm pairs
-    are excluded by the kernel — exactly the CASE -> false rule of the
-    SQL sweep; null/ragged clusters take the per-pair fallback."""
-    nr = V.nrm[i0:i0 + n]
-    dims = V.dims(np, i0, n)
-    if V.dirty or dims.min() != dims.max():
-        dd, amb = _greedy_cluster_slow(V.embl, i0, n, nr, lo, hi)
-        return np.asarray(dd, dtype=bool), amb
-    ii, jj, cos = _cand_cos_exact(np, V.matrix(np, i0, n, int(dims[0])),
-                                  nr, lo)
-    return _fold_verdicts(np, n, jj, cos, lo, hi)
-
-
-def _greedy_cluster_slow(embl, i0, n, nr, lo, hi):
-    """Per-pair fallback for clusters with null/ragged vectors.
-    NULL-cosine pairs (ragged dims, null elements, null norms) score
-    NULL in the SQL sweep, which both consumers treat as keep — so
-    they contribute nothing here."""
-    import math
-
-    pyrows = [embl[i0 + j].as_py() for j in range(n)]
-    dd = [False] * n
-    amb = [[] for _ in range(n)]
-    for j in range(1, n):
-        for i in range(j):
-            den = nr[i] * nr[j]
-            if den == 0.0:
-                continue                    # CASE -> false
-            a, b = pyrows[i], pyrows[j]
-            if a is None or b is None or len(a) != len(b) \
-                    or any(v is None for v in a) \
-                    or any(v is None for v in b):
-                continue                    # NULL cosine -> keep
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + x * y
-            raw = acc / den
-            if math.isnan(raw) or raw >= hi:
-                dd[j] = True
-            elif lo <= raw < hi:
-                amb[j].append(raw)
-        if dd[j]:
-            amb[j] = []
-    return dd, amb
+        "NOT (dropped_def OR exists(amb, c -> round(c, 6) >= "
+        f"{float(cos_min)!r})) AS sem_keep")
 
 
 def semdedup(emb: DataFrame, cos_min: float = 0.95,
              k: int = None, iters: int = IVF_ITERS,
              codebook: DataFrame = None,
-             max_cluster: int = SEM_MAX_CLUSTER,
-             sweep: str | None = None) -> DataFrame:
+             max_cluster: int = SEM_MAX_CLUSTER) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means-cluster the
     embeddings, then inside each cluster drop every vector that is
@@ -1303,61 +1019,36 @@ def semdedup(emb: DataFrame, cos_min: float = 0.95,
     their own verdict), so no connected-components pass exists in the
     published method either.
 
-    Output: one row per vector — (vec_id, centroid_id, cos_c,
+    Output: one row per input vector — (vec_id, centroid_id, cos_c,
     sem_keep). Downstream joins `WHERE sem_keep` to materialize the
     deduplicated corpus.
 
     Scale shape: the codebook broadcasts (train once via
     kmeans_codebook / vector_index.CodebookIndex, pass it in);
-    assignment is one broadcast cross join + a vec_id window (ONE hash
-    exchange of (vec_id, emb)); then ONE exchange groups each cluster
-    and the O(n_c^2) cosine sweep runs LOCALLY per cluster via an
-    indexed HOF — no pair explosion ever shuffles, the verdict comes
-    out of the same task that holds the cluster. Per-task work is
-    bounded by `max_cluster` (deterministic array_sort truncation with
-    the observed lsh_cap drop metric — size k so the MEAN cluster sits
-    well under the cap, k ~ corpus/2500 with the 4096 default: the 10x
-    evidence run at 500k/k=200 measured max natural cluster 2780 with
-    zero drops; k ~ corpus/5000 would put the mean itself above the
-    cap and truncate most clusters). With ``k=None`` (the default) and
-    no prebuilt codebook, k derives from that rule via one count()
-    action at plan build — a fixed small k on a large corpus would
-    silently cap-truncate ~every cluster and pass ~everything as
-    sem_keep=true (the derive_salt_buckets precedent: data-sized, not
-    guessed). That is the paper's own cost profile: SemDeDup is
-    O(N^2/k) cosine work, paid map-side."""
+    assignment is one vec_id window over ~1 candidate per vector; then
+    ONE exchange groups each cluster and the O(n_c^2) cosine sweep runs
+    LOCALLY per cluster — no pair explosion ever shuffles, the verdict
+    comes out of the same task that holds the cluster. It is the
+    SemanticIndex's one pass (batch_and_index_verdicts) with no index.
+    Per-task work is bounded by `max_cluster`: only the first
+    max_cluster items of a cluster in keep order are judged, the rest
+    keep their verdict row as kept, and the truncation is observed via
+    the lsh_cap metric. Size k so the MEAN cluster sits well under the
+    cap, k ~ corpus/2500 with the 4096 default: the 10x evidence run at
+    500k/k=200 measured max natural cluster 2780 with zero drops;
+    k ~ corpus/5000 would put the mean itself above the cap and
+    truncate most clusters. With ``k=None`` (the default) and no
+    prebuilt codebook, k derives from that rule via one count() action
+    at plan build — a fixed small k on a large corpus would silently
+    cap-truncate ~every cluster and pass ~everything as sem_keep=true
+    (the derive_salt_buckets precedent: data-sized, not guessed). That
+    is the paper's own cost profile: SemDeDup is O(N^2/k) cosine work,
+    paid map-side."""
     if codebook is None and k is None:
         k = max(IVF_K, emb.count() // SEM_MEAN_CLUSTER)
     cents = codebook if codebook is not None \
         else kmeans_codebook(emb, k, iters)
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    # assigned feeds TWO plan branches (the cluster sweep and the
-    # row-completeness join below); without materialization Catalyst
-    # plans them as independent subtrees and the broadcast-argmax
-    # assignment runs twice per query (measured: 2.5 s per pass at
-    # 40k x 64d — round 6). A LAZY localCheckpoint computes it once
-    # and shares the partitions; same lineage-truncation discipline
-    # as duplicate_clusters.
-    assigned = _assign_with_cos(base, cents).localCheckpoint(eager=False)
-    # array_sort on struct(c, v, e, nrm) orders lexicographically by
-    # (cos_c ASC, vec_id ASC); vec_id is unique so the later fields are
-    # never compared. The sorted prefix IS the keep order.
-    grouped = (assigned.groupBy("centroid_id")
-               .agg(F.array_sort(F.collect_list(F.struct(
-                   F.col("cos_c").alias("c"),
-                   F.col("vec_id").alias("v"),
-                   F.col("emb").alias("e"),
-                   item_norm(F.col("emb")).alias("nrm"))))
-                   .alias("items")))
-    grouped = _cap_bucket_items(grouped, max_cluster)
-    judged = (greedy_verdicts(grouped, cos_min, sweep=sweep)
-              .select("vec_id", (~F.col("dropped")).alias("_sk")))
-    # Row-completeness under the cap: a truncated item vanishes from
-    # `items`, so its verdict must not vanish with it — every assigned
-    # vector gets a row, beyond-cap items default to KEPT (uncompared;
-    # the truncation is observed via the lsh_cap metric, never silent).
-    return (assigned.select("vec_id", "centroid_id", "cos_c")
-            .join(judged, "vec_id", "left")
-            .withColumn("sem_keep", F.coalesce("_sk", F.lit(True)))
-            .drop("_sk"))
+    return batch_and_index_verdicts(_assign_with_cos(base, cents), None,
+                                    cos_min, max_cluster)

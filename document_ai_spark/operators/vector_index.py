@@ -27,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .batch_index import AtomicBatchIndex
-from .dedup import _cap_bucket_items
 from .similarity import (
     EMB_LSH_BANDS,
     EMB_LSH_ROWS,
@@ -36,6 +35,9 @@ from .similarity import (
     IVF_K,
     IVF_SAMPLE_MOD,
     _band_bucket,
+    _first_band_cond,
+    _pair_groups,
+    _sweep_pairs,
     kmeans_codebook,
 )
 
@@ -109,15 +111,6 @@ def banded_vector_rows(emb: DataFrame, bands: int = EMB_LSH_BANDS,
             .select("vec_id", "emb", "bks", "bk.band", "bk.bucket"))
 
 
-def _first_band_cond(bks_x: str, bks_y: str) -> str:
-    """SQL condition: the current `band` is the first whose buckets
-    agree (bucket equality <=> sign-slice agreement) — the shuffle-free
-    multi-band pair dedup shared with similarity.embedding_near_dups."""
-    return ("CASE WHEN band = 0 THEN true ELSE NOT exists("
-            f"  slice(zip_with({bks_x}, {bks_y}, (a, c) -> a = c), "
-            "        1, band), t -> t) END")
-
-
 class EmbeddingIndex(AtomicBatchIndex):
     """Persisted banded sign-LSH embedding index with atomic commits."""
 
@@ -145,35 +138,12 @@ class EmbeddingIndex(AtomicBatchIndex):
         # re-folded both norms for every candidate) and survivors-only
         # emission inside the HOF/join, the similarity.py sweep shape.
         from .similarity import _cosine_pre, item_norm
-        new = b.rows.withColumn("nrm", item_norm(F.col("emb")))
+        new = b.rows.withColumn("nrm", item_norm("emb"))
 
-        # (a) batch-internal pairs: identical shape to
-        # similarity.embedding_near_dups' SQL sweep (items vec_id-
-        # sorted by the cap; least/greatest canonicalizes for
-        # uniformity with the cross source).
-        grouped = (new.groupBy("band", "bucket")
-                   .agg(F.collect_list(
-                        F.struct("vec_id", "emb", "bks", "nrm"))
-                        .alias("items"))
-                   .where(F.size("items") > 1))
-        grouped = _cap_bucket_items(grouped, max_bucket)
-        cond = _first_band_cond("x.bks", "y.bks")
-        pair_expr = (
-            "flatten(transform(items, (x, i) -> "
-            "  filter(transform(filter(slice(items, i + 2, size(items)), "
-            f"           y -> {cond}), y -> "
-            "     struct(least(x.vec_id, y.vec_id) AS id_a, "
-            "            greatest(x.vec_id, y.vec_id) AS id_b, "
-            "            round(CASE WHEN x.nrm * y.nrm = 0.0D THEN 0.0D "
-            "              ELSE aggregate(zip_with(x.emb, y.emb, "
-            "                               (a, b) -> a * b), "
-            "                             cast(0.0 as double), "
-            "                             (acc, v) -> acc + v) "
-            "              / (x.nrm * y.nrm) END, 6) AS cos_sim)), "
-            f"    p -> p.cos_sim >= {float(cos_min)!r})))"
-        )
-        intra = (grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
-                 .select("p.*"))
+        # (a) batch-internal pairs: embedding_near_dups' own sweep over
+        # the batch's buckets (items vec_id-sorted by the cap, so
+        # id_a < id_b).
+        intra = _sweep_pairs(_pair_groups(new, max_bucket), cos_min)
 
         # (b) batch-vs-index: probe ONLY buckets the batch touches
         # (broadcast of the batch's band keys), cap the matched index
@@ -187,7 +157,7 @@ class EmbeddingIndex(AtomicBatchIndex):
             w = Window.partitionBy("band", "bucket").orderBy("vec_id")
             idx = (idx.withColumn("_rn", F.row_number().over(w))
                    .where(F.col("_rn") <= max_bucket).drop("_rn")
-                   .withColumn("onrm", item_norm(F.col("emb"))))
+                   .withColumn("onrm", item_norm("emb")))
             cross = (new.alias("n").join(
                 idx.alias("o"), ["band", "bucket"])
                 .where(F.expr(_first_band_cond("n.bks", "o.bks")))

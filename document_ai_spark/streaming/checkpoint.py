@@ -42,21 +42,12 @@ from .store import (  # noqa: F401  (re-exported public surface)
     SnapshotStore,
     affected_buckets,
     iceberg_available,
+    observed_value,
 )
 
 
 class JobKilled(RuntimeError):
     """Raised by the test hook to simulate a mid-run crash."""
-
-
-def _observed(obs: Observation, key: str):
-    """An Observation metric, or None when the metrics row never
-    materialized — AQE empty-relation elision, or (the hang case) an
-    extract_fn whose output plan never executed the observed subtree
-    at all: a bare obs.get would BLOCK forever there, so this rides
-    the bounded store.observed_value poll."""
-    from .store import observed_value
-    return observed_value(obs, key)
 
 
 def ingest_bucketed(docs_df: DataFrame, path: str, buckets: int) -> str:
@@ -205,15 +196,16 @@ def run_checkpointed(
         if caps.observations:
             metrics.update(caps.summary())
         if obs_out is not None:
-            mp = _observed(obs_out, "missing_payloads")
-            metrics["missing_payloads"] = int(mp or 0)
-        # AQE's PropagateEmptyRelation can collapse the observed subtree
-        # when every row of a bucket is filtered at runtime (e.g. a gate
-        # that keeps nothing), leaving the CollectMetrics row empty —
-        # Observation.get then throws from toPyRow. Telemetry must not
-        # kill the run: fall back to one count() of the (deterministic)
-        # pre-observe input.
-        rows_in = _observed(obs_in, "rows_in")
+            mp = observed_value(obs_out, "missing_payloads")
+            if mp.fired:            # elided-empty: no rows, none missing
+                metrics["missing_payloads"] = int(mp.value or 0)
+            else:
+                metrics["missing_payloads_unobserved"] = 1
+        # No rows_in when AQE elided the observed subtree (every row of
+        # the bucket filtered at runtime, e.g. a gate that keeps
+        # nothing) or the subtree never ran: fall back to one count()
+        # of the (deterministic) pre-observe input.
+        rows_in = observed_value(obs_in, "rows_in").value
         if rows_in is None:
             rows_in = sub_raw.count()
         store.commit(Lineage(

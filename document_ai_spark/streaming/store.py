@@ -27,7 +27,8 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Dict, Iterable, List
+from typing import (Any, Dict, Iterable, List, NamedTuple, Optional,
+                    Tuple)
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -63,32 +64,54 @@ class IcebergUnavailable(RuntimeError):
     """Raised when the Iceberg Spark runtime is not on the classpath."""
 
 
+class Observed(NamedTuple):
+    """One bounded Observation read, with three outcomes:
+    ``fired`` and a ``value`` (the metric); ``fired`` with value None
+    (elided-empty: the observed plan ran, but AQE's
+    PropagateEmptyRelation collapsed the observed subtree to an empty
+    LocalTableScan — its input was empty — so no metrics row exists);
+    or not ``fired`` (the observed subtree never executed within the
+    timeout, so nothing is known — never read that as zero)."""
+    fired: bool
+    value: Any = None
+
+
 def observed_value(obs: Observation, key: str,
-                   timeout_sec: float = 5.0):
-    """Bounded Observation read: the metric value, or None when the
-    observed subtree never materialized. Two failure modes a bare
-    ``obs.get`` does not survive: AQE's PropagateEmptyRelation can
-    collapse the observed subtree to an empty LocalTableScan (get then
-    throws inside toPyRow), and a plan whose CollectMetrics node never
-    executed leaves get BLOCKING forever (the dedup._CapCollector
-    lesson — e.g. an extract_fn whose output does not derive from the
-    observed input). Polls the JVM getRowOrEmpty, which resolves on the
-    first check in the normal already-fired case."""
+                   timeout_sec: float = 5.0) -> Observed:
+    """Bounded Observation read of metric ``key``. A bare ``obs.get``
+    survives neither failure mode: on an elided subtree it throws
+    inside toPyRow, and on a plan whose CollectMetrics node never
+    executed (e.g. an extract_fn whose output does not derive from the
+    observed input) it BLOCKS forever. Polls the JVM getRowOrEmpty,
+    which resolves on the first check in the normal already-fired
+    case, and sleeps between polls while unfired."""
     deadline = time.monotonic() + timeout_sec
     while True:
         jo = getattr(obs, "_jo", None)
         if jo is not None and jo.getRowOrEmpty().isDefined():
             try:
-                return obs.get.get(key)
-            except Exception:          # noqa: BLE001 — telemetry only
-                return None
+                return Observed(True, obs.get.get(key))
+            except Exception:          # noqa: BLE001 — the empty row
+                return Observed(True)
         if time.monotonic() >= deadline:
-            return None
-        # Not fired yet: sleep between polls — a never-firing
-        # observation would otherwise spin py4j RPCs at full rate for
-        # the whole timeout (round-6 ADVICE). The already-fired fast
-        # path above still resolves on iteration one.
+            return Observed(False)
         time.sleep(0.05)
+
+
+def iceberg_bucket_rows(written: Observed) -> Tuple[bool, Optional[int]]:
+    """(truncate, rows_out) for an IcebergStore bucket write from the
+    outcome of its rows_out observation. overwritePartitions with an
+    EMPTY input replaces nothing, so stale rows of a crashed prior
+    write would stay visible (resurrecting tombstone-deleted docs): an
+    empty write — elided-empty or a count of 0 — truncates the
+    partition. A never-fired observation says nothing about the rows
+    just written, so it must NOT truncate (that DELETE would remove
+    the rows the write committed); rows_out is then None and the
+    caller reads it from the committed snapshot."""
+    if not written.fired:
+        return False, None
+    rows = int(written.value or 0)
+    return rows == 0, rows
 
 
 class SnapshotStore(abc.ABC):
@@ -248,7 +271,7 @@ class ManifestStore(SnapshotStore):
         obs = Observation()
         (out_df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
          .write.mode("overwrite").parquet(self.staged_path(bucket)))
-        rows = observed_value(obs, "rows_out")
+        rows = observed_value(obs, "rows_out").value
         if rows is None:
             rows = out_df.sparkSession.read.parquet(
                 self.staged_path(bucket)).count()
@@ -457,25 +480,22 @@ class IcebergStore(SnapshotStore):
         else:
             (tagged.writeTo(self.table).partitionedBy("bucket")
              .using("iceberg").create())
-        rows = observed_value(obs, "rows_out")
-        if rows is None:
-            # AQE elides the observed subtree exactly when the write's
-            # input is empty, so None means ZERO rows written — the
-            # old fallback counted the table partition, which still
-            # holds stale rows from a crashed prior write: it returned
-            # a nonzero rows_out AND skipped the truncation below,
-            # committing resurrected (possibly tombstone-deleted) rows
-            # with a wrong lineage count (round-6 ADVICE, medium).
-            rows = 0
-        # Dynamic overwritePartitions with an EMPTY input replaces
-        # nothing — stale rows from a crashed prior write of this
-        # bucket would stay visible (resurrecting tombstone-deleted
-        # docs). Truncate the partition explicitly when this write
-        # produced zero rows.
-        if int(rows) == 0 and existed:
+        truncate, rows = iceberg_bucket_rows(
+            observed_value(obs, "rows_out"))
+        if truncate and existed:
             self.spark.sql(f"DELETE FROM {self.table} "
                            f"WHERE bucket = {int(bucket)}")
-        return int(rows)
+        if rows is None:
+            rows = self._added_records()
+        return rows
+
+    def _added_records(self) -> int:
+        """added-records of the table's latest snapshot: the rows the
+        write that just committed it added."""
+        row = self.spark.sql(
+            f"SELECT summary['added-records'] AS n FROM {self.table}"
+            ".snapshots ORDER BY committed_at DESC LIMIT 1").collect()
+        return int(row[0]["n"] or 0) if row else 0
 
     def commit(self, lineage: Lineage) -> None:
         lineage.seq = self._next_seq()

@@ -16,8 +16,9 @@ from pyspark.sql import functions as F
 from document_ai_spark.operators.curation import (
     BLOOM_K,
     bloom_bitmap,
+    bloom_bitmap_df,
     bloom_decontaminate,
-    bloom_hit,
+    bloom_hit_col,
 )
 
 
@@ -61,10 +62,11 @@ def test_tiny_bitmap_floods_candidates_but_not_output(spark):
     are Bloom-positive, yet the confirm join keeps the verdict exact."""
     ev = (_evals(spark).where(F.col("text").isNotNull())
           .select(F.col("text").alias("_etext")).distinct())
-    words = bloom_bitmap(ev, "_etext", m_bits=64)
-    n_cand = (_docs(spark)
-              .where(F.col("text").isNotNull()
-                     & bloom_hit(F.col("text"), words)).count())
+    bm = bloom_bitmap_df(ev, "_etext", m_bits=64)
+    n_cand = (_docs(spark).where(F.col("text").isNotNull())
+              .crossJoin(F.broadcast(bm))
+              .where(bloom_hit_col(F.col("text"), F.col("_bm"), 64))
+              .count())
     n_true = sum(not keep for keep in _exact_keep(spark).values())
     assert n_cand > n_true          # false positives present...
     got = {r["doc_id"]: r["keep"]
@@ -108,8 +110,10 @@ def test_bitmap_build_matches_probe_reads(spark):
     construction)."""
     ev = (_evals(spark).where(F.col("text").isNotNull())
           .select(F.col("text").alias("_etext")).distinct())
-    words = bloom_bitmap(ev, "_etext", m_bits=1 << 12)
-    misses = ev.where(~bloom_hit(F.col("_etext"), words)).count()
+    bm = bloom_bitmap_df(ev, "_etext", m_bits=1 << 12)
+    misses = (ev.crossJoin(F.broadcast(bm))
+              .where(~bloom_hit_col(F.col("_etext"), F.col("_bm"), 1 << 12))
+              .count())
     assert misses == 0
 
 
@@ -131,11 +135,7 @@ def test_bitmap_frame_plan_shape(spark):
     bitmap arrives via BroadcastExchange (broadcast cross join of the
     one-row frame), and the corpus side of the candidate filter has no
     Exchange below the confirm join's shuffle."""
-    from document_ai_spark.operators.curation import (
-        bloom_bitmap_df,
-        bloom_eval_texts,
-        bloom_hit_col,
-    )
+    from document_ai_spark.operators.curation import bloom_eval_texts
 
     ev = bloom_eval_texts(_evals(spark))
     bm = bloom_bitmap_df(ev, "_etext", m_bits=1 << 12)
@@ -156,8 +156,6 @@ def test_bitmap_frame_matches_list_bitmap(spark):
     """bloom_bitmap_df's dense word array must equal bloom_bitmap's
     list word-for-word (same positions aggregate, densified on the
     executors instead of the driver)."""
-    from document_ai_spark.operators.curation import bloom_bitmap_df
-
     ev = (_evals(spark).where(F.col("text").isNotNull())
           .select(F.col("text").alias("_etext")).distinct())
     words = bloom_bitmap(ev, "_etext", m_bits=1 << 12)

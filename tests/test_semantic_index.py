@@ -107,9 +107,9 @@ def test_replay_is_idempotent(spark, tmp_path):
 
 
 def _two_leg_reference(spark, idx, batch_id):
-    """The verdicts of committed ``batch_id`` under the two-leg
-    composition the one-pass kernel replaced: greedy_verdicts (SQL
-    sweep) over the keep-ordered clusters capped at max_cluster, OR
+    """The verdicts of committed ``batch_id`` under the two-leg SQL
+    composition: greedy_drop_expr over the keep-ordered clusters
+    capped at max_cluster, OR
     batch_vs_index_dropped (SQL join filter) against the batches
     committed before it, each cluster capped to its max_cluster lowest
     vec_ids."""
@@ -120,7 +120,7 @@ def _two_leg_reference(spark, idx, batch_id):
     from document_ai_spark.operators.dedup import _cap_bucket_items
     from document_ai_spark.operators.similarity import (
         batch_vs_index_dropped,
-        greedy_verdicts,
+        greedy_drop_expr,
         item_norm,
     )
 
@@ -129,10 +129,10 @@ def _two_leg_reference(spark, idx, batch_id):
         F.array_sort(F.collect_list(F.struct(
             F.col("cos_c").alias("c"), F.col("vec_id").alias("v"),
             F.col("emb").alias("e"),
-            item_norm(F.col("emb")).alias("nrm")))).alias("items")),
+            item_norm("emb").alias("nrm")))).alias("items")),
         idx.max_cluster)
-    dropped = {r.vec_id for r in greedy_verdicts(
-        grouped, idx.cos_min, sweep="sql").collect() if r.dropped}
+    dropped = {r.r.vec_id for r in grouped.select(F.explode(
+        greedy_drop_expr(idx.cos_min)).alias("r")).collect() if r.r.dropped}
     w = Window.partitionBy("centroid_id").orderBy("vec_id")
     prior = (idx.index_df(spark, before_seq=idx._batch_seq(batch_id))
              .withColumn("_rn", F.row_number().over(w))
@@ -155,7 +155,7 @@ def test_one_pass_verdicts_match_two_leg_composition(spark, tmp_path,
     the cross leg at cos_min <= 0 but never by the intra leg; NaN,
     ragged, null and null-element vectors; a replayed batch_id returns
     identical verdicts. b2 holds no null or ragged vector, so it runs
-    the dgemm kernels; b3's run the per-pair fallbacks."""
+    the dgemm kernels; b3's cluster is dirty and takes the SQL forms."""
     idx = SemanticIndex(str(tmp_path / "idx"), cos_min=cos_min, k=1,
                         iters=1, max_cluster=3)
     # even ids (the training sample) sit symmetric around angle 0, so
@@ -255,3 +255,25 @@ def test_second_append_does_not_reread_codebook(spark, tmp_path,
     second = {r.vec_id: r.sem_keep for r in idx.append_and_find(
         spark, _emb(spark, _scaled(base)), "b2").collect()}
     assert set(first.values()) and not any(second.values())
+
+
+def test_dirty_batch_runs_the_clean_batch_jobs(spark, tmp_path):
+    """Routing dirty clusters to the SQL forms adds no Spark job: a
+    probing append whose batch holds one ragged and one null-element
+    vector runs as many jobs as an all-clean batch (job ids per call,
+    not timed), and both dirty vectors keep (NULL cosines)."""
+    idx = SemanticIndex(str(tmp_path / "idx"), cos_min=0.95, k=2,
+                        iters=1)
+    idx.append_and_find(spark, _emb(spark, [(i, _angle(0.5 * i))
+                                            for i in range(6)]), "b0")
+    clean = [(100 + i, _angle(0.5 * i + 0.2)) for i in range(4)]
+    dirty = clean[:2] + [(200, [1.0] * (DIM // 2)),
+                         (201, [1.0, None] + [1.0] * (DIM - 2))]
+    jobs, got = {}, {}
+    for name, rows in (("b1", clean), ("b2", dirty)):
+        def call():
+            got[name] = {r.vec_id: r.sem_keep for r in idx.append_and_find(
+                spark, _emb(spark, rows), name).collect()}
+        jobs[name] = len(_job_ids(spark, f"sem-{name}", call))
+    assert jobs["b1"] == jobs["b2"] > 0
+    assert got["b2"][200] is True and got["b2"][201] is True

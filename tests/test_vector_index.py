@@ -76,6 +76,18 @@ def test_embed_replay_is_idempotent(spark, tmp_path):
     assert per_vec == 1
 
 
+def test_embed_index_duplicate_id_no_self_pair(spark, tmp_path):
+    """A vec_id repeated inside one batch never pairs with itself — the
+    self-pair guard of the shared sweep (embedding_near_dups' rule)."""
+    emb = spark.createDataFrame(
+        [(5, [1.0, 2.0, 3.0, 4.0] * 2), (5, [1.0, 2.0, 3.0, 4.0] * 2),
+         (6, [2.0, 4.0, 6.0, 8.0] * 2)],
+        "vec_id long, embedding array<double>")
+    idx = EmbeddingIndex(str(tmp_path / "dup_idx"), bands=2, rows=4)
+    pairs = _pairset(idx.append_and_find(spark, emb, "b0", cos_min=0.5))
+    assert pairs == {(5, 6, 1.0)}
+
+
 def test_embed_index_param_and_format_pinning(spark, tmp_path):
     root = str(tmp_path / "emb_idx3")
     EmbeddingIndex(root, bands=4, rows=8)
