@@ -44,8 +44,8 @@ from typing import Callable, Dict, List, NamedTuple, Tuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
 
-# footer key under which Spark's parquet writer stores the row schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+from ..streaming.store import footer_schema, parquet_files
+
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -116,13 +116,8 @@ class AtomicBatchIndex:
             committed = self._committed()
             if not committed:
                 return StructType.fromDDL(self.SCHEMA)
-            import pyarrow.parquet as pq
             d = os.path.join(self.index_dir, committed[0][0])
-            part = min(f for f in os.listdir(d)
-                       if f.startswith("part-") and f.endswith(".parquet"))
-            kv = pq.read_schema(os.path.join(d, part)).metadata
-            self._schema = StructType.fromJson(
-                json.loads(kv[_SPARK_SCHEMA_KEY]))
+            self._schema = footer_schema(parquet_files(d)[0])
         return self._schema
 
     def _write_rows(self, rows: DataFrame, stage: str,

@@ -177,7 +177,11 @@ def _assign_with_cos(base: DataFrame, cents: DataFrame,
 
     ``crows``: the codebook's (centroid_id, cent) rows when the caller
     already holds them (vector_index.CodebookIndex memoizes them); the
-    collect job is then skipped."""
+    collect job is then skipped.
+
+    vec_id is a key: both forms keep ONE row per vec_id (the window's
+    row_number, the Arrow path's argmax window), silently dropping
+    every further row that repeats it."""
     if crows is None:
         crows = cents.select("centroid_id", "cent").collect()
     cvecs = [r["cent"] for r in crows]
@@ -381,7 +385,10 @@ def ivf_topk(emb: DataFrame, probe_ids, k: int = 5,
     vector_index.CodebookIndex — so repeated queries and incremental
     batches skip Lloyd retraining; None trains in-line (the codebook is
     deterministic and 6-decimal-rounded, so both paths give identical
-    results — parity-tested)."""
+    results — parity-tested).
+
+    vec_id is a key: the assignment (_assign_with_cos) keeps one row
+    per vec_id, so rows repeating a vec_id are searched as one."""
     cents = codebook if codebook is not None \
         else kmeans_codebook(emb, n_clusters)
     base = emb.select(
@@ -1019,9 +1026,11 @@ def semdedup(emb: DataFrame, cos_min: float = 0.95,
     their own verdict), so no connected-components pass exists in the
     published method either.
 
-    Output: one row per input vector — (vec_id, centroid_id, cos_c,
+    Output: one row per input vec_id — (vec_id, centroid_id, cos_c,
     sem_keep). Downstream joins `WHERE sem_keep` to materialize the
-    deduplicated corpus.
+    deduplicated corpus. vec_id is a key: the assignment
+    (_assign_with_cos) keeps one row per vec_id, so rows repeating a
+    vec_id come back as one row, and no counter records the others.
 
     Scale shape: the codebook broadcasts (train once via
     kmeans_codebook / vector_index.CodebookIndex, pass it in);

@@ -241,7 +241,10 @@ class SemanticIndex(AtomicBatchIndex):
                         batch_id: str) -> DataFrame:
         """Verdicts (vec_id, centroid_id, cos_c, sem_keep) for the
         batch, then commit its assigned rows. Replay returns the same
-        verdicts (probes the index state before its own seq)."""
+        verdicts (probes the index state before its own seq).
+
+        vec_id is a key: the assignment keeps one row per vec_id, so a
+        batch that repeats a vec_id gets one verdict for it."""
         from .similarity import batch_and_index_verdicts
 
         b = self._open_batch(spark, batch_id,

@@ -13,12 +13,41 @@ idempotent (same input slice -> same output).
 
 Scan discipline: the input is first INGESTED ONCE into a parquet layout
 physically partitioned by the same pmod(xxhash64(doc_id), B) bucket
-expression (or the caller points at an already-bucketed table). Each
-bucket iteration then reads ONLY that bucket's files via partition
-pruning — B iterations touch the input once in total, where filtering an
-unpartitioned source per bucket would scan it B times (at 100 TB, 1 pass
-vs 32). Row counts ride the write job itself as df.observe() metrics; no
-separate count() jobs.
+expression (store.bucket_expr; or the caller points at an
+already-bucketed table). Reads prune to the buckets they need, so the
+run touches the input once in total, where filtering an unpartitioned
+source per bucket would scan it B times (at 100 TB, 1 pass vs 32).
+Reads are schema-pinned: the schema comes from one parquet footer of
+the ingested input (pyarrow), so no read starts a schema-inference job.
+
+Waves. With the default extraction and a store that supports waves
+(ManifestStore), the run extracts a *wave* of consecutive pending
+buckets in one Spark plan: one read of the wave's buckets, the
+extraction, and one write partitioned by bucket into one staging
+directory. Buckets are then committed one by one, in bucket order, so a
+kill still lands between two bucket commits and ``fail_after`` still
+counts commits. A wave takes pending buckets while their ingested bytes
+(file sizes, no job) fit in ``spark.sql.files.maxPartitionBytes x
+defaultParallelism`` — one round of scan tasks at Spark's own split
+size. A bucket larger than that is a wave of one, so large inputs keep
+bucket-sized checkpoints. A custom ``extract_fn`` gets waves of one (it
+may aggregate across its input, so a wave could change its answer), as
+does a store without wave support (IcebergStore).
+
+Counts come from files, not Observations: a bucket's rows_in is the row
+count in its ingested files' footers less the tombstoned ids present in
+them; rows_out and (default extraction) missing_payloads come from the
+staged output's footers and ``n_missing_payloads`` column. The
+reassembly salt K is derived once per run root and kept in
+``_meta.json``, so a resume runs no schema-inference or approxQuantile
+job.
+
+Staged reuse. Once a wave's job succeeds its staging directory is sealed
+with a ``_wave.json`` record: per bucket, the salt and the pending
+tombstones it was computed under, and its counts. A resume commits a
+still-staged bucket without re-extracting it only if its current
+tombstones (and the salt) equal the recorded ones; a ``delete_docs`` in
+between forces a recompute of that bucket.
 
 The reference analog is the batch-job progress dict + per-file error
 capture (reference backend/main.py:522-562) and the WorkflowState
@@ -27,12 +56,14 @@ and lost on crash; here, durable and resumable.
 """
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import time
-from typing import Callable, Iterable, Optional
+from typing import Callable, Dict, Iterable, List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from .store import (  # noqa: F401  (re-exported public surface)
     IcebergStore,
@@ -41,8 +72,13 @@ from .store import (  # noqa: F401  (re-exported public surface)
     ManifestStore,
     SnapshotStore,
     affected_buckets,
+    bucket_expr,
+    column_sum,
+    footer_rows,
+    footer_schema,
     iceberg_available,
     observed_value,
+    parquet_files,
 )
 
 
@@ -54,16 +90,110 @@ def ingest_bucketed(docs_df: DataFrame, path: str, buckets: int) -> str:
     """One full pass over the source, written parquet-partitioned by the
     run's bucket expression so per-bucket reads prune to 1/B of files."""
     (docs_df
-     .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(buckets)))
+     .withColumn("bucket", bucket_expr(buckets))
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
     return path
 
 
 def bucket_slice(spark: SparkSession, input_path: str, bucket: int
                  ) -> DataFrame:
-    """Partition-pruned read of one bucket (only bucket=<b>/ files)."""
-    return (spark.read.parquet(input_path)
-            .where(F.col("bucket") == bucket).drop("bucket"))
+    """Partition-pruned, schema-pinned read of one bucket (only
+    bucket=<b>/ files) — the read the runner makes."""
+    return _BucketedInput(spark, input_path).read([bucket], [])
+
+
+class _BucketedInput:
+    """The ingested input, parquet under ``<path>/bucket=<b>/``. Its
+    schema, sizes and row counts come from the files themselves."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark, self.path = spark, path
+        self._schema: Optional[StructType] = None
+
+    def files(self, bucket: int) -> List[str]:
+        return parquet_files(os.path.join(self.path, f"bucket={bucket}"))
+
+    def nbytes(self, bucket: int) -> int:
+        return sum(os.path.getsize(f) for f in self.files(bucket))
+
+    def schema(self) -> StructType:
+        """Read schema: the docs columns from one footer, plus the
+        ``bucket`` partition column."""
+        if self._schema is None:
+            first = next(f for name in sorted(os.listdir(self.path))
+                         if name.startswith("bucket=")
+                         for f in parquet_files(
+                             os.path.join(self.path, name)))
+            self._schema = footer_schema(first).add("bucket", IntegerType())
+        return self._schema
+
+    def read(self, buckets: List[int], tombstones: List[str]
+             ) -> DataFrame:
+        """The given buckets' docs, less the tombstoned ids (docs deleted
+        while their bucket was uncommitted: the ingested input still
+        holds them, and reading them would resurrect them)."""
+        df = (self.spark.read.schema(self.schema()).parquet(self.path)
+              .where(F.col("bucket").isin(buckets)))
+        if tombstones:
+            df = df.where(~F.col("doc_id").isin(tombstones))
+        return df.drop("bucket")
+
+    def rows(self, bucket: int, tombstones: List[str]) -> int:
+        """rows_in of a bucket: its footer row count less the rows whose
+        doc_id is tombstoned (read with pyarrow only when any is)."""
+        files = self.files(bucket)
+        n = footer_rows(files)
+        if tombstones:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+            gone = pa.array(tombstones, pa.string())
+            for f in files:
+                ids = pq.read_table(f, columns=["doc_id"])["doc_id"]
+                n -= pc.sum(pc.is_in(ids, value_set=gone)).as_py() or 0
+        return n
+
+    def waves(self, pending: List[int]) -> List[List[int]]:
+        """Consecutive runs of ``pending`` whose ingested bytes fit in
+        one round of scan tasks (maxPartitionBytes x defaultParallelism);
+        a bucket larger than that is a wave of one."""
+        bound = (self.spark._jsparkSession.sessionState().conf()
+                 .filesMaxPartitionBytes()
+                 * self.spark.sparkContext.defaultParallelism)
+        waves: List[List[int]] = []
+        size = 0
+        for b in pending:
+            nb = self.nbytes(b)
+            if not waves or size + nb > bound:
+                waves.append([])
+                size = 0
+            waves[-1].append(b)
+            size += nb
+        return waves
+
+
+def _read_meta(out_root: str, buckets: int, run_id: str) -> dict:
+    """The run root's ``_meta.json``, created on first use. The bucket
+    count defines the doc->partition assignment; resuming with a
+    different count would skip the wrong slices, so it is pinned."""
+    os.makedirs(out_root, exist_ok=True)
+    path = os.path.join(out_root, "_meta.json")
+    if not os.path.exists(path):
+        _write_meta(out_root, {"buckets": buckets, "run_id": run_id})
+    with open(path) as f:
+        meta = json.load(f)
+    if meta["buckets"] != buckets:
+        raise ValueError(
+            f"store at {out_root} was created with buckets="
+            f"{meta['buckets']}; cannot resume with buckets={buckets}")
+    return meta
+
+
+def _write_meta(out_root: str, meta: dict) -> None:
+    path = os.path.join(out_root, "_meta.json")
+    with open(path + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.rename(path + ".tmp", path)
 
 
 def run_checkpointed(
@@ -78,41 +208,35 @@ def run_checkpointed(
     docs_path: Optional[str] = None,
     store: Optional[SnapshotStore] = None,
 ) -> SnapshotStore:
-    """Bucket-at-a-time checkpointed run; resumes by skipping committed
-    buckets. ``fail_after`` commits N buckets then raises (crash test).
+    """Checkpointed run; resumes by skipping committed buckets.
+    ``fail_after`` commits N buckets then raises (crash test).
+
+    The default extraction on a wave-capable store runs in waves: one
+    Spark plan extracts several consecutive pending buckets (as many as
+    fit in maxPartitionBytes x defaultParallelism ingested bytes) and
+    one write stages them partitioned by bucket; each bucket is then
+    committed on its own, in bucket order. A custom ``extract_fn`` or a
+    store without wave support runs one bucket per plan. Lineage counts
+    come from parquet footers; a resume commits a bucket staged by a
+    sealed wave without recomputing it when its pending tombstones are
+    unchanged (see the module docstring).
 
     ``docs_path``, when given, must point at a parquet dataset already
     partitioned by a ``bucket`` column matching this run's bucket count
     (e.g. a previous ingest_bucketed output); ``docs_df`` is then unused.
     Otherwise ``docs_df`` is ingested once under ``out_root``/_input.
 
-    Scan discipline caveat: the DOCS side is ingested bucketed (each
-    bucket reads 1/B of files), but ``payloads_df`` is joined whole per
-    bucket — B scans of the payload source. At scale, use the bucketed
-    storage layout (sources/bucketed.py, run_extract.py
-    --bucketed-layout), which co-partitions payloads by the same key
-    and removes both the scans and the join exchanges.
+    Scan discipline caveat: the DOCS side is ingested bucketed, but
+    ``payloads_df`` is joined whole per plan — one scan of the payload
+    source per wave. At scale, use the bucketed storage layout
+    (sources/bucketed.py, run_extract.py --bucketed-layout), which
+    co-partitions payloads by the same key and removes both the scans
+    and the join exchanges.
     """
     from ..plans.pipeline import extract as default_extract
 
-    extract_fn = extract_fn or default_extract
     store = store or ManifestStore(out_root)
-    # The bucket count defines the doc->partition assignment; resuming with
-    # a different count would skip the wrong slices. Pin it in run meta.
-    os.makedirs(out_root, exist_ok=True)
-    meta_path = os.path.join(out_root, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta["buckets"] != buckets:
-            raise ValueError(
-                f"store at {out_root} was created with buckets="
-                f"{meta['buckets']}; cannot resume with buckets={buckets}")
-    else:
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"buckets": buckets, "run_id": run_id}, f)
-        os.rename(tmp, meta_path)
+    meta = _read_meta(out_root, buckets, run_id)
 
     if docs_path is None:
         docs_path = os.path.join(out_root, "_input")
@@ -123,67 +247,77 @@ def run_checkpointed(
                 raise ValueError("docs_df or a pre-ingested docs_path "
                                  "is required")
             ingest_bucketed(docs_df, docs_path, buckets)
+    inp = _BucketedInput(spark, docs_path)
 
-    # Default pipeline: derive the reassembly salt ONCE from the whole
-    # ingested corpus instead of letting extract() re-run its
-    # approxQuantile action on every bucket slice (one scan per bucket,
-    # and per-bucket quantiles are the wrong population anyway —
-    # SURVEY §7.4 sizes K from corpus span-count quantiles). The input
-    # is immutable after ingest, so a resume re-derives the same K;
-    # reassembly output is byte-identical for any K (pinned by
-    # test_skew), making this purely a cost change.
     done = store.committed_buckets()
-    committed_this_run = 0
+    pending = [b for b in range(buckets) if b not in done]
+    if not pending:
+        return store
+    tombs = {b: store.pending_tombstones(b) for b in pending}
 
-    if extract_fn is default_extract:
-        from ..plans.pipeline import derive_salt_buckets
+    if extract_fn is None or extract_fn is default_extract:
+        # Default pipeline: the reassembly salt K is derived ONCE per run
+        # root from the whole ingested corpus (per-bucket quantiles are
+        # the wrong population — SURVEY §7.4 sizes K from corpus
+        # span-count quantiles) and kept in _meta.json, so a resume does
+        # not re-run the approxQuantile scan. The input is immutable
+        # after ingest, and reassembly output is byte-identical for any
+        # K (pinned by test_skew), so this is purely a cost change.
+        if "salt_buckets" not in meta:
+            from ..plans.pipeline import derive_salt_buckets
+            meta["salt_buckets"] = derive_salt_buckets(
+                spark.read.schema(inp.schema()).parquet(docs_path))
+            _write_meta(out_root, meta)
+        k_salt = meta["salt_buckets"]
 
-        # Derived AFTER the committed-buckets check and only when work
-        # remains: a fully-committed no-op resume must not pay the
-        # corpus-wide approxQuantile scan (review finding). The input
-        # is immutable after ingest, so any resume that does have
-        # pending buckets re-derives the identical K.
-        if len(done) < buckets:
-            k_salt = derive_salt_buckets(spark.read.parquet(docs_path))
+        def fn(d, p):
+            return default_extract(d, p, salt_buckets=k_salt)
+        bucket_aware = False
+        waves = store.supports_waves
+    else:
+        # Bucket-aware extract functions (e.g. per-bucket incremental
+        # dedup batch ids) declare a third REQUIRED parameter and
+        # receive b. Count only non-defaulted positionals.
+        fn, k_salt, waves = extract_fn, None, False
+        bucket_aware = len([
+            p for p in inspect.signature(extract_fn).parameters.values()
+            if p.default is inspect.Parameter.empty
+            and p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]) >= 3
 
-            def extract_fn(d, p):                   # noqa: E731
-                return default_extract(d, p, salt_buckets=k_salt)
+    def run_wave(wave: List[int]) -> Dict[int, dict]:
+        """Extract and stage ``wave``; returns its per-bucket entries
+        (salt, tombstones, rows_in, rows_out, metrics), sealed."""
+        out = fn(inp.read(wave, sorted(i for b in wave for i in tombs[b])),
+                 payloads_df).withColumn("bucket", bucket_expr(buckets))
+        if len(wave) > 1:
+            # One writer task per bucket (AQE splits a large one): a
+            # plain partitioned write would leave one file per task in
+            # every bucket of the wave.
+            out = out.hint("rebalance", "bucket")
+        rows_out = store.write_bucket(tuple(wave), out)
+        entries = {b: {
+            "salt": k_salt,
+            "tombstones": tombs[b],
+            "rows_in": inp.rows(b, tombs[b]),
+            "rows_out": rows_out[b],
+            "metrics": json.dumps({"missing_payloads": column_sum(
+                store.staged_files(b), "n_missing_payloads")}),
+        } for b in wave}
+        store.seal_wave(entries)
+        return entries
 
-    from ..operators.dedup import collect_cap_metrics
+    def run_one(b: int) -> Dict[int, dict]:
+        """Extract and stage bucket ``b`` alone. Plan metrics ride the
+        write job and land in the lineage row: missing-payload counts
+        from the output column, LSH bucket-cap drops from any capped
+        dedup stage the extract_fn composed (collect_cap_metrics hooks
+        dedup._cap_bucket_items for the duration of the bucket)."""
+        from ..operators.dedup import collect_cap_metrics
 
-    for b in range(buckets):
-        if b in done:
-            continue
-        t0 = time.monotonic()
-        obs_in = Observation()
-        sub = bucket_slice(spark, docs_path, b)
-        # Docs deleted while this bucket was uncommitted: the ingested
-        # input still contains them, so filter them out here — otherwise
-        # a resume-after-delete would silently resurrect deleted doc_ids.
-        tombs = store.pending_tombstones(b)
-        if tombs:
-            sub = sub.where(~F.col("doc_id").isin(tombs))
-        sub_raw = sub
-        sub = sub.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        # Plan metrics ride the write job itself and land in the lineage
-        # row (Lineage.metrics): missing-payload counts from the output
-        # column, LSH bucket-cap drops from any capped dedup stage the
-        # extract_fn composed (collect_cap_metrics hooks
-        # dedup._cap_bucket_items for the duration of the bucket).
+        sub = inp.read([b], tombs[b])
         with collect_cap_metrics() as caps:
-            # Bucket-aware extract functions (e.g. per-bucket incremental
-            # dedup batch ids) declare a third REQUIRED parameter and
-            # receive b. Count only non-defaulted positionals: the
-            # default pipeline's extract(docs, payloads, salt_buckets=K)
-            # must NOT get b as its salt count (bucket 0 would make the
-            # reassembly salt pmod(offset, 0) — remainder by zero).
-            import inspect
-            required = [
-                p for p in inspect.signature(extract_fn).parameters.values()
-                if p.default is inspect.Parameter.empty
-                and p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)]
-            out = (extract_fn(sub, payloads_df, b) if len(required) >= 3
-                   else extract_fn(sub, payloads_df))
+            out = fn(sub, payloads_df, b) if bucket_aware else fn(
+                sub, payloads_df)
             obs_out = None
             if "n_missing_payloads" in out.columns:
                 obs_out = Observation()
@@ -191,7 +325,7 @@ def run_checkpointed(
                     obs_out,
                     F.sum(F.col("n_missing_payloads").cast("long"))
                      .alias("missing_payloads"))
-            rows_out = store.write_bucket(b, out)  # rows ride the write job
+            rows_out = store.write_bucket(b, out)
         metrics = {}
         if caps.observations:
             metrics.update(caps.summary())
@@ -201,24 +335,43 @@ def run_checkpointed(
                 metrics["missing_payloads"] = int(mp.value or 0)
             else:
                 metrics["missing_payloads_unobserved"] = 1
-        # No rows_in when AQE elided the observed subtree (every row of
-        # the bucket filtered at runtime, e.g. a gate that keeps
-        # nothing) or the subtree never ran: fall back to one count()
-        # of the (deterministic) pre-observe input.
-        rows_in = observed_value(obs_in, "rows_in").value
-        if rows_in is None:
-            rows_in = sub_raw.count()
+        return {b: {"rows_in": inp.rows(b, tombs[b]), "rows_out": rows_out,
+                    "metrics": json.dumps(metrics, sort_keys=True)}}
+
+    entries: Dict[int, dict] = {}
+    if waves:
+        entries = {b: e for b, e in store.sealed_waves().items()
+                   if b in tombs and e["salt"] == k_salt
+                   and e["tombstones"] == tombs[b]}
+        plan = inp.waves([b for b in pending if b not in entries])
+    else:
+        plan = [[b] for b in pending]
+    plan_iter = iter(plan)
+    shares: Dict[int, float] = {}       # per-bucket share of wave time
+    committed_this_run = 0
+    for b in pending:
+        if b not in entries:
+            # b opens the next planned wave: waves are consecutive runs
+            # of the pending buckets that need computing.
+            wave = next(plan_iter)
+            t_wave = time.monotonic()
+            entries.update(run_wave(wave) if waves else run_one(b))
+            share = (time.monotonic() - t_wave) / len(wave)
+            shares.update({w: share for w in wave})
+        t0 = time.monotonic()
+        e = entries.pop(b)
         store.commit(Lineage(
             run_id=run_id,
             partition_id=b,
             snapshot_id=store.snapshot_id(),
-            rows_in=int(rows_in),
-            rows_out=rows_out,
-            latency_ms=round((time.monotonic() - t0) * 1000, 3),
+            rows_in=int(e["rows_in"]),
+            rows_out=int(e["rows_out"]),
+            latency_ms=round((shares.get(b, 0.0) + time.monotonic() - t0)
+                             * 1000, 3),
             committed_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            metrics=json.dumps(metrics, sort_keys=True),
+            metrics=e["metrics"],
         ))
-        if tombs:
+        if tombs[b]:
             store.clear_tombstones(b)   # applied and committed above
         committed_this_run += 1
         if fail_after is not None and committed_this_run >= fail_after:

@@ -19,6 +19,10 @@ The runner (checkpoint.run_checkpointed) only talks to the interface:
     commit(lineage)                            (atomic publish)
     read_committed(spark) / lineage_df(spark) / snapshot_id()
     delete_docs(spark, doc_ids, buckets) -> n_buckets_rewritten
+A store whose ``supports_waves`` is true also stages a whole wave of
+buckets in one write (``write_bucket`` with a tuple of buckets) and
+keeps a sealed wave's staged buckets across a crash (``seal_wave`` /
+``sealed_waves`` / ``staged_files``).
 """
 from __future__ import annotations
 
@@ -30,7 +34,13 @@ from dataclasses import dataclass
 from typing import (Any, Dict, Iterable, List, NamedTuple, Optional,
                     Tuple)
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
+                         functions as F)
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+WAVE_RECORD = "_wave.json"
 
 
 @dataclass
@@ -58,6 +68,49 @@ class Lineage:
 _LINEAGE_SCHEMA = ("run_id string, partition_id int, snapshot_id string, "
                    "rows_in long, rows_out long, latency_ms double, "
                    "committed_at string, seq long, metrics string")
+
+
+def parquet_files(directory: str) -> List[str]:
+    """The data files of one parquet directory (no hidden, ``_`` or
+    checksum files), sorted; empty when the directory does not exist."""
+    if not os.path.isdir(directory):
+        return []
+    return sorted(os.path.join(directory, f) for f in os.listdir(directory)
+                  if f.endswith(".parquet") and not f.startswith((".", "_")))
+
+
+def footer_schema(path: str) -> StructType:
+    """The Spark row schema a parquet file was written with, read from
+    its footer with pyarrow (no Spark job)."""
+    import pyarrow.parquet as pq
+    kv = pq.read_schema(path).metadata
+    return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+
+
+def footer_rows(files: Iterable[str]) -> int:
+    """Rows in the given parquet files, from their footers."""
+    import pyarrow.parquet as pq
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def column_sum(files: Iterable[str], column: str) -> int:
+    """Sum of one integer column over the given parquet files, read
+    with pyarrow (NULLs count as 0, as in SQL's sum)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    total = 0
+    for f in files:
+        s = pc.sum(pq.read_table(f, columns=[column])[column]).as_py()
+        total += int(s or 0)
+    return total
+
+
+def bucket_expr(buckets: int) -> Column:
+    """The doc -> bucket assignment of a checkpointed run:
+    pmod(xxhash64(doc_id), B). The ingest, the wave write and the
+    delete path all use this one expression; a Python reimplementation
+    of xxhash64 would silently drift."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(buckets))
 
 
 class IcebergUnavailable(RuntimeError):
@@ -117,6 +170,11 @@ def iceberg_bucket_rows(written: Observed) -> Tuple[bool, Optional[int]]:
 class SnapshotStore(abc.ABC):
     """Commit/visibility contract for bucket-at-a-time checkpointed runs."""
 
+    # True when write_bucket also takes a tuple of buckets (one staged
+    # write for a wave) and sealed waves survive a crash; see
+    # ManifestStore. Other stores get waves of one.
+    supports_waves = False
+
     @abc.abstractmethod
     def committed_buckets(self) -> Dict[int, dict]: ...
 
@@ -125,8 +183,8 @@ class SnapshotStore(abc.ABC):
 
     @abc.abstractmethod
     def write_bucket(self, bucket: int, out_df: DataFrame) -> int:
-        """Write one bucket's output (staged where the backend allows);
-        returns rows_out observed during the single write job."""
+        """Write one bucket's output (staged where the backend allows)
+        in a single write job; returns its rows_out."""
 
     @abc.abstractmethod
     def commit(self, lineage: Lineage) -> None:
@@ -176,15 +234,13 @@ class SnapshotStore(abc.ABC):
 def bucket_of_ids(spark: SparkSession, doc_ids: Iterable[str],
                   buckets: int) -> Dict[int, List[str]]:
     """{bucket: [doc_ids hashing into it]} — computed with the SAME Spark
-    expression that assigned them (pmod(xxhash64(doc_id), B)); a Python
-    reimplementation of xxhash64 would silently drift."""
+    expression that assigned them (bucket_expr)."""
     ids = [(str(d),) for d in doc_ids]
     if not ids:
         return {}
     out: Dict[int, List[str]] = {}
     for r in (spark.createDataFrame(ids, "doc_id string")
-              .select("doc_id",
-                      F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).alias("b"))
+              .select("doc_id", bucket_expr(buckets).alias("b"))
               .collect()):
         out.setdefault(int(r["b"]), []).append(r["doc_id"])
     return out
@@ -201,10 +257,17 @@ class ManifestStore(SnapshotStore):
 
     Layout under ``root``:
         data/bucket=<b>/      committed parquet output for bucket b
-        _staging/<b>/          in-flight writes (never read)
+        _staging/<b>/          in-flight single-bucket writes (never read)
+        _staging/wave-<t>/     one wave's write, partitioned bucket=<b>/;
+                               its _wave.json seals it (see seal_wave)
         _manifests/<b>.json    commit record = lineage row (atomic rename)
         _snapshot.json         monotone commit counter (survives deletes)
+
+    Row counts come from the staged files' parquet footers (pyarrow, no
+    Spark job), never from an Observation.
     """
+
+    supports_waves = True
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -215,6 +278,8 @@ class ManifestStore(SnapshotStore):
         for d in (self.data_dir, self.staging_dir, self.manifest_dir,
                   self.tombstone_dir):
             os.makedirs(d, exist_ok=True)
+        # bucket -> the staged directory commit() promotes for it
+        self._staged: Dict[int, str] = {}
 
     def committed_buckets(self) -> Dict[int, dict]:
         out = {}
@@ -262,23 +327,97 @@ class ManifestStore(SnapshotStore):
 
     # -- write / commit -----------------------------------------------------
 
-    def write_bucket(self, bucket: int, out_df: DataFrame) -> int:
-        """Stage the bucket's parquet; rows_out comes from an Observation
-        riding the same write job — no second count() pass. When AQE
-        elides the observed subtree (runtime-empty bucket), fall back to
-        counting the STAGED files just written — never a recompute of
-        the plan, and telemetry must not kill the run."""
-        obs = Observation()
-        (out_df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-         .write.mode("overwrite").parquet(self.staged_path(bucket)))
-        rows = observed_value(obs, "rows_out").value
-        if rows is None:
-            rows = out_df.sparkSession.read.parquet(
-                self.staged_path(bucket)).count()
-        return int(rows)
+    def write_bucket(self, bucket, out_df: DataFrame):
+        """Stage output in one Spark job; rows come from the staged
+        footers.
+
+        ``bucket`` an int: ``out_df`` is that bucket's output, staged at
+        staged_path(bucket); returns its rows_out. ``bucket`` a tuple of
+        buckets (a wave): ``out_df`` carries a ``bucket`` column and is
+        written partitionBy("bucket") into a new ``_staging/wave-<t>``;
+        returns {bucket: rows_out}. partitionBy writes no directory for
+        a bucket without rows, so each such bucket gets an empty file
+        with the output schema (one small job each), as a single-bucket
+        write of no rows would have."""
+        if not isinstance(bucket, tuple):
+            path = self.staged_path(bucket)
+            out_df.write.mode("overwrite").parquet(path)
+            self._staged[bucket] = path
+            return footer_rows(parquet_files(path))
+        import shutil
+        # Unsealed waves are leftovers of wave jobs that crashed: never
+        # reused, so drop them before staging the next one.
+        for wave in self._wave_dirs():
+            if not os.path.exists(os.path.join(wave, WAVE_RECORD)):
+                shutil.rmtree(wave, ignore_errors=True)
+        wave = os.path.join(self.staging_dir, f"wave-{time.time_ns():020d}")
+        out_df.write.partitionBy("bucket").parquet(wave)
+        rows = {}
+        for b in bucket:
+            path = os.path.join(wave, f"bucket={b}")
+            if not parquet_files(path):
+                out_df.sparkSession.createDataFrame(
+                    [], out_df.drop("bucket").schema
+                ).write.mode("overwrite").parquet(path)
+            self._staged[b] = path
+            rows[b] = footer_rows(parquet_files(path))
+        return rows
+
+    def staged_files(self, bucket: int) -> List[str]:
+        """Parquet files of the staged output commit() would promote."""
+        return parquet_files(self._staged.get(bucket,
+                                              self.staged_path(bucket)))
+
+    def _wave_dirs(self) -> List[str]:
+        return [os.path.join(self.staging_dir, n)
+                for n in sorted(os.listdir(self.staging_dir))
+                if n.startswith("wave-")]
+
+    def seal_wave(self, entries: Dict[int, dict]) -> None:
+        """Record, atomically, that the wave just written for the
+        buckets of ``entries`` completed: ``_wave.json`` holds one
+        caller-defined entry per bucket (what the staged copy was
+        computed from, and its counts)."""
+        wave = os.path.dirname(self._staged[next(iter(entries))])
+        tmp = os.path.join(wave, "." + WAVE_RECORD)
+        with open(tmp, "w") as f:
+            json.dump({"buckets": {str(b): e for b, e in entries.items()}},
+                      f, sort_keys=True)
+        os.rename(tmp, os.path.join(wave, WAVE_RECORD))
+
+    def sealed_waves(self) -> Dict[int, dict]:
+        """{bucket: entry} for every bucket still staged by a sealed
+        wave (the newest wave wins). commit() of such a bucket promotes
+        that staged copy, unless the bucket is written again first."""
+        out: Dict[int, dict] = {}
+        for wave in self._wave_dirs():
+            rec = os.path.join(wave, WAVE_RECORD)
+            if not os.path.exists(rec):
+                continue
+            with open(rec) as f:
+                entries = json.load(f)["buckets"]
+            for b, entry in entries.items():
+                path = os.path.join(wave, f"bucket={b}")
+                if os.path.isdir(path):
+                    out[int(b)] = entry
+                    self._staged[int(b)] = path
+        return out
+
+    def _sweep_waves(self, bucket: int) -> None:
+        """After ``bucket`` committed: drop stale staged copies of it in
+        older waves, then every sealed wave with no bucket left."""
+        import shutil
+        for wave in self._wave_dirs():
+            shutil.rmtree(os.path.join(wave, f"bucket={bucket}"),
+                          ignore_errors=True)
+            if (os.path.exists(os.path.join(wave, WAVE_RECORD))
+                    and not any(n.startswith("bucket=")
+                                for n in os.listdir(wave))):
+                shutil.rmtree(wave, ignore_errors=True)
 
     def commit(self, lineage: Lineage) -> None:
-        """Promote staging -> data, then write the manifest atomically.
+        """Promote the bucket's staged output -> data, then write the
+        manifest atomically.
 
         Crash-window discipline (each step leaves a resumable state):
           1. counter FIRST — a crash after it leaves a seq gap, never a
@@ -305,8 +444,9 @@ class ManifestStore(SnapshotStore):
         # off by one (review finding).
         lineage.snapshot_id = f"snap-{seq_next:06d}"
         self._write_seq(seq_next)
-        src, dst = self.staged_path(lineage.partition_id), \
-            self.committed_path(lineage.partition_id)
+        src = self._staged.pop(lineage.partition_id,
+                               self.staged_path(lineage.partition_id))
+        dst = self.committed_path(lineage.partition_id)
         man = os.path.join(self.manifest_dir,
                            f"{lineage.partition_id}.json")
         if os.path.exists(man):
@@ -330,6 +470,7 @@ class ManifestStore(SnapshotStore):
         with open(tmp, "w") as f:
             json.dump(lineage.__dict__, f)
         os.rename(tmp, man)
+        self._sweep_waves(lineage.partition_id)
 
     # -- tombstones -----------------------------------------------------------
 

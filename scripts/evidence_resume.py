@@ -4,10 +4,20 @@ The checkpointed CLIs (run_extract.py, run_curate.py) are kill/resume
 tested only at small SF (tests/test_checkpoint.py uses the in-process
 ``fail_after`` hook). This script provides the hard-mode evidence at the
 EVIDENCE_10X sizes: launch the REAL CLI as a subprocess, SIGKILL its
-whole process group (python + JVM) after k bucket manifests appear, then
-re-submit the identical command and let it run to completion. The
-resumed store must be indistinguishable from a never-killed single-shot
-run:
+whole process group (python + JVM) mid-run, then re-submit the identical
+command and let it run to completion. The kill point depends on how the
+leg commits:
+
+  * extraction runs in waves (one Spark plan for many buckets, which
+    then commit within milliseconds of each other), so a manifest count
+    would only be seen after the run ended; the kill lands while a
+    wave's job is in flight: its ``_staging/wave-*`` directory exists
+    and has no ``_wave.json`` seal yet;
+  * curation runs one bucket per plan, so the kill lands once k bucket
+    manifests exist.
+
+The resumed store must be indistinguishable from a never-killed
+single-shot run:
 
   * output equality — order-insensitive dataset hash (count + sum of
     xxhash64 over the canonical JSON of every row) over the committed
@@ -48,8 +58,9 @@ QUICK = "--quick" in sys.argv
 N_EXTRACT = 60_000 if QUICK else 600_000
 N_CURATE = 50_000 if QUICK else 500_000
 BUCKETS = 16
-KILL_AFTER = 5          # SIGKILL once this many bucket manifests exist
+KILL_AFTER = 5          # curation: SIGKILL once this many manifests exist
 THREADS = 32
+POLL_S = 0.25
 
 
 def _session(name):
@@ -107,31 +118,51 @@ def _manifest_count(out_root: str) -> int:
     return sum(1 for n in os.listdir(mdir) if n.endswith(".json"))
 
 
-def run_killed_then_resume(cmd: list, out_root: str, timeout: float = 3600
-                           ) -> dict:
-    """Start the CLI, SIGKILL its process group after KILL_AFTER bucket
-    manifests exist, re-run the identical command to completion."""
+def after_manifests(out_root: str):
+    """Kill point: KILL_AFTER bucket manifests exist."""
+    n = _manifest_count(out_root)
+    return f"{n} manifests" if n >= KILL_AFTER else None
+
+
+def wave_in_flight(out_root: str):
+    """Kill point: a wave's staging directory exists without its
+    _wave.json seal (its extraction job is running)."""
+    staging = os.path.join(out_root, "_staging")
+    if not os.path.isdir(staging):
+        return None
+    for name in sorted(os.listdir(staging)):
+        if (name.startswith("wave-") and not os.path.exists(
+                os.path.join(staging, name, "_wave.json"))):
+            return (f"{name} in flight, "
+                    f"{_manifest_count(out_root)} manifests")
+    return None
+
+
+def run_killed_then_resume(cmd: list, out_root: str, kill_point,
+                           timeout: float = 3600) -> dict:
+    """Start the CLI, SIGKILL its process group once ``kill_point``
+    (out_root -> description or None) reports one, then re-run the
+    identical command to completion."""
     t0 = time.monotonic()
     proc = _launch(cmd)
-    killed_at_buckets = -1
+    killed_at = None
     try:
         while proc.poll() is None:
-            n = _manifest_count(out_root)
-            if n >= KILL_AFTER:
-                killed_at_buckets = n
+            killed_at = kill_point(out_root)
+            if killed_at is not None:
                 os.killpg(os.getpgid(proc.pid), signal.SIGKILL)
                 break
             if time.monotonic() - t0 > timeout:
                 raise TimeoutError(f"no kill point reached: {cmd}")
-            time.sleep(0.25)
+            time.sleep(POLL_S)
         proc.wait(timeout=60)
     finally:
         if proc.poll() is None:
             os.killpg(os.getpgid(proc.pid), signal.SIGKILL)
-    if killed_at_buckets < 0:
+    if killed_at is None:
         raise RuntimeError(
-            f"CLI exited (rc={proc.returncode}) before {KILL_AFTER} "
-            f"buckets committed — kill point never reached: {cmd}")
+            f"CLI exited (rc={proc.returncode}) before the kill point "
+            f"{kill_point.__name__} was reached: {cmd}")
     kill_sec = time.monotonic() - t0
 
     t1 = time.monotonic()
@@ -141,7 +172,7 @@ def run_killed_then_resume(cmd: list, out_root: str, timeout: float = 3600
     if rc != 0:
         raise RuntimeError(f"resume run failed rc={rc}: {cmd}")
     return {
-        "killed_at_buckets": killed_at_buckets,
+        "killed_at": killed_at,
         "kill_mode": "SIGKILL(process group)",
         "killed_leg_sec": round(kill_sec, 1),
         "resume_leg_sec": round(time.monotonic() - t1, 1),
@@ -191,7 +222,8 @@ def extraction_leg(out: dict) -> None:
         raise RuntimeError(f"single-shot extract failed rc={rc}")
     single_sec = round(time.monotonic() - t0, 1)
 
-    sched = run_killed_then_resume(cmd(out_resumed), out_resumed)
+    sched = run_killed_then_resume(cmd(out_resumed), out_resumed,
+                                   wave_in_flight)
 
     s = _session("resume-compare-extract")
     try:
@@ -245,7 +277,8 @@ def curation_leg(out: dict) -> None:
         raise RuntimeError(f"single-shot curate failed rc={rc}")
     single_sec = round(time.monotonic() - t0, 1)
 
-    sched = run_killed_then_resume(cmd(out_resumed), out_resumed)
+    sched = run_killed_then_resume(cmd(out_resumed), out_resumed,
+                                   after_manifests)
 
     s = _session("resume-compare-curate")
     try:

@@ -127,8 +127,8 @@ def test_observe_metrics_persisted_in_lineage(spark, corpus_dfs, tmp_path):
 def test_runtime_empty_bucket_commits(spark, corpus_dfs, tmp_path):
     """An extract_fn that filters EVERY row at runtime must still
     commit its buckets: AQE's PropagateEmptyRelation can collapse the
-    observed subtree and leave Observation.get with no metrics row —
-    telemetry degrades to a recount instead of killing the run."""
+    whole write subtree, and the lineage counts, read from parquet
+    footers, still come out (rows_out 0)."""
     import pyspark.sql.functions as F
 
     docs_df, payloads_df = corpus_dfs
@@ -189,9 +189,8 @@ def test_recommit_sweeps_aside_and_serves_new_data(spark, tmp_path):
 
 
 def test_write_bucket_empty_output_returns_zero(spark, tmp_path):
-    """Telemetry must not kill the run when AQE elides the observed
-    subtree of a runtime-empty bucket: rows_out falls back to counting
-    the staged files."""
+    """A runtime-empty bucket (AQE may elide its whole subtree) stages
+    and counts 0 rows from its footers."""
     from pyspark.sql import functions as F
 
     from document_ai_spark.streaming.store import ManifestStore
@@ -201,3 +200,218 @@ def test_write_bucket_empty_output_returns_zero(spark, tmp_path):
                                   .alias("doc_id"))
           .where(F.length("doc_id") > 10))           # runtime-empty
     assert store.write_bucket(1, df) == 0
+
+
+# -- waves --------------------------------------------------------------------
+
+def _job_ids(spark, group, fn):
+    """Spark jobs started by ``fn()`` (counted, not timed)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _committed_ids(spark, store):
+    return sorted(r["doc_id"] for r in
+                  store.read_committed(spark).select("doc_id").collect())
+
+
+def _all_ids(docs_df):
+    return sorted(r["doc_id"] for r in docs_df.select("doc_id").collect())
+
+
+@pytest.fixture
+def wave_bytes(spark):
+    """Sets the wave bound (maxPartitionBytes x defaultParallelism) to
+    the given number of bytes for the test, restoring it afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+
+    def set_bound(nbytes):
+        par = spark.sparkContext.defaultParallelism
+        spark.conf.set(key, str(max(1, nbytes // par)))
+    yield set_bound
+    spark.conf.set(key, old)
+
+
+def test_write_bucket_runs_one_job(spark, tmp_path):
+    """A nonempty bucket write is one Spark job: rows_out comes from the
+    staged footers, with no Observation and no recount."""
+    store = ManifestStore(str(tmp_path / "st_one"))
+    df = spark.createDataFrame([("a",), ("b",), ("c",)], "doc_id string")
+    rows = []
+    assert len(_job_ids(spark, "write-bucket",
+                        lambda: rows.append(store.write_bucket(0, df)))) == 1
+    assert rows == [3]
+
+
+def test_kill_between_commits_of_one_wave(spark, corpus_dfs, tmp_path,
+                                          wave_bytes):
+    """fail_after lands between two commits of one wave; the resume
+    loses and duplicates no doc and leaves committed buckets alone."""
+    from document_ai_spark.streaming.checkpoint import ingest_bucketed
+    from document_ai_spark.streaming.store import parquet_files
+
+    docs_df, payloads_df = corpus_dfs
+    root = str(tmp_path / "ckpt_waves")
+    ingest_bucketed(docs_df, os.path.join(root, "_input"), 6)
+    sizes = [sum(os.path.getsize(f) for f in parquet_files(
+        os.path.join(root, "_input", f"bucket={b}"))) for b in range(6)]
+    wave_bytes(sizes[0] + sizes[1] + sizes[2] // 2)    # waves of ~2
+    with pytest.raises(JobKilled):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=6,
+                         fail_after=1)
+    store = ManifestStore(root)
+    done = set(store.committed_buckets())
+    staged = set(store.sealed_waves())
+    assert len(done) == 1
+    # the first wave holds more than the committed bucket, not all six
+    assert done == {0} and staged == {1}
+    mtimes = {b: os.path.getmtime(store.committed_path(b)) for b in done}
+
+    store = run_checkpointed(spark, docs_df, payloads_df, root, buckets=6)
+    assert _committed_ids(spark, store) == _all_ids(docs_df)
+    lin = store.committed_buckets().values()
+    assert sum(m["rows_in"] for m in lin) == docs_df.count()
+    assert sum(m["rows_out"] for m in lin) == docs_df.count()
+    for b, t in mtimes.items():
+        assert os.path.getmtime(store.committed_path(b)) == t
+    assert not os.listdir(store.staging_dir)
+
+
+def test_delete_in_staged_bucket_recomputes_it(spark, corpus_dfs, tmp_path):
+    """A doc deleted from a staged but uncommitted bucket: the resume
+    recomputes that bucket without the doc and commits the other staged
+    buckets as staged."""
+    from document_ai_spark.streaming.checkpoint import delete_docs
+    from document_ai_spark.streaming.store import bucket_of_ids
+
+    docs_df, payloads_df = corpus_dfs
+    root = str(tmp_path / "ckpt_wave_del")
+    with pytest.raises(JobKilled):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=4,
+                         fail_after=1)
+    store = ManifestStore(root)
+    staged = store.sealed_waves()
+    assert len(staged) == 3
+    by_bucket = bucket_of_ids(spark, _all_ids(docs_df), 4)
+    hit = min(staged)
+    victim = by_bucket[hit][0]
+    files = {b: sorted(os.path.basename(f) for f in store.staged_files(b))
+             for b in staged}
+    assert delete_docs(spark, store, [victim], root) == 0
+
+    store = run_checkpointed(spark, docs_df, payloads_df, root, buckets=4)
+    assert _committed_ids(spark, store) == sorted(
+        set(_all_ids(docs_df)) - {victim})
+    lin = store.committed_buckets()
+    assert lin[hit]["rows_in"] == len(by_bucket[hit]) - 1
+    assert lin[hit]["rows_out"] == len(by_bucket[hit]) - 1
+    for b in staged:
+        got = sorted(f for f in os.listdir(store.committed_path(b))
+                     if f.endswith(".parquet") and not f.startswith("."))
+        assert (got == files[b]) == (b != hit), b
+
+
+def test_resume_of_staged_buckets_runs_no_job(spark, corpus_dfs, tmp_path):
+    """Pending buckets all staged by a sealed wave, tombstones unchanged:
+    the resume commits them without a single Spark job."""
+    docs_df, payloads_df = corpus_dfs
+    root = str(tmp_path / "ckpt_wave_nojob")
+    with pytest.raises(JobKilled):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=4,
+                         fail_after=1)
+    stores = []
+    jobs = _job_ids(spark, "staged-resume", lambda: stores.append(
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=4)))
+    assert jobs == []
+    assert len(stores[0].committed_buckets()) == 4
+    assert _committed_ids(spark, stores[0]) == _all_ids(docs_df)
+
+
+def test_bucket_without_rows_commits_empty(spark, corpus_dfs, tmp_path):
+    """More buckets than docs: partitionBy writes no directory for an
+    empty bucket, yet every bucket commits (rows_out 0) and the committed
+    snapshot reads back."""
+    docs_df, payloads_df = corpus_dfs
+    few = docs_df.orderBy("doc_id").limit(3)
+    root = str(tmp_path / "ckpt_wave_empty")
+    store = run_checkpointed(spark, few, payloads_df, root, buckets=8)
+    lin = store.committed_buckets()
+    assert len(lin) == 8
+    assert sum(m["rows_out"] for m in lin.values()) == 3
+    assert sum(m["rows_out"] == 0 for m in lin.values()) >= 5
+    assert _committed_ids(spark, store) == _all_ids(few)
+
+
+def test_resume_runs_no_salt_or_schema_job(spark, corpus_dfs, tmp_path,
+                                           monkeypatch):
+    """The salt K is derived once per run root and kept in _meta.json,
+    and every input read is schema-pinned: a resume that must recompute
+    its pending buckets runs no approxQuantile and no schema inference."""
+    import json
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql.readwriter import DataFrameReader
+
+    docs_df, payloads_df = corpus_dfs
+    root = str(tmp_path / "ckpt_wave_salt")
+    with pytest.raises(JobKilled):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=4,
+                         fail_after=1)
+    with open(os.path.join(root, "_meta.json")) as f:
+        k = json.load(f)["salt_buckets"]
+    store = ManifestStore(root)
+    for wave in os.listdir(store.staging_dir):   # crash before the seal
+        os.remove(os.path.join(store.staging_dir, wave, "_wave.json"))
+
+    def no_quantile(*args, **kwargs):
+        raise AssertionError("approxQuantile ran on resume")
+
+    pin, read = DataFrameReader.schema, DataFrameReader.parquet
+
+    def pinned(self, schema):
+        self._pinned = True
+        return pin(self, schema)
+
+    def parquet(self, *paths, **kwargs):
+        assert getattr(self, "_pinned", False), f"unpinned read {paths}"
+        return read(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "approxQuantile", no_quantile)
+    monkeypatch.setattr(DataFrameReader, "schema", pinned)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    store = run_checkpointed(spark, docs_df, payloads_df, root, buckets=4)
+    monkeypatch.undo()
+    assert _committed_ids(spark, store) == _all_ids(docs_df)
+    with open(os.path.join(root, "_meta.json")) as f:
+        assert json.load(f)["salt_buckets"] == k
+
+
+def test_legacy_meta_resumes(spark, corpus_dfs, tmp_path):
+    """A _meta.json written without a salt still opens: the resume
+    derives K once and stores it. A bucket-count mismatch still raises."""
+    import json
+
+    docs_df, payloads_df = corpus_dfs
+    root = str(tmp_path / "ckpt_legacy")
+    with pytest.raises(JobKilled):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=3,
+                         fail_after=1, extract_fn=extract)
+    meta_path = os.path.join(root, "_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    k = meta.pop("salt_buckets")
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="buckets=3"):
+        run_checkpointed(spark, docs_df, payloads_df, root, buckets=4)
+
+    store = run_checkpointed(spark, docs_df, payloads_df, root, buckets=3)
+    assert _committed_ids(spark, store) == _all_ids(docs_df)
+    with open(meta_path) as f:
+        assert json.load(f)["salt_buckets"] == k

@@ -164,6 +164,21 @@ _SEM_ROWS = [
 ]
 
 
+def test_repeated_vec_id_returns_one_row(spark, tmp_path):
+    """vec_id is a key: the assignment keeps one row per vec_id, so the
+    15 fixture rows (vec_id 9 twice) give 14 verdicts from semdedup and
+    from SemanticIndex.append_and_find alike. Pinned so that changing
+    this (keeping or counting the repeats) is a deliberate change."""
+    from document_ai_spark.operators.vector_index import SemanticIndex
+
+    df = spark.createDataFrame(_SEM_ROWS,
+                               "vec_id: long, embedding: array<double>")
+    assert len(_SEM_ROWS) == 15
+    assert semdedup(df, cos_min=0.95, k=3).count() == 14
+    idx = SemanticIndex(str(tmp_path / "idx"), cos_min=0.95, k=3, iters=1)
+    assert idx.append_and_find(spark, df, "b1").count() == 14
+
+
 def _semdedup_sql(spark, df, cos_min, k=None, max_cluster=4096,
                   codebook=None):
     """semdedup as the SQL composition the one pass replaced, spelled

@@ -112,10 +112,11 @@ def test_delete_mid_run_tombstones_uncommitted_buckets(
     assert len(done) == 2
 
     # Pick victims from buckets that are NOT yet committed.
-    from document_ai_spark.streaming.checkpoint import affected_buckets
+    from document_ai_spark.streaming.store import bucket_of_ids
     cands = [r["doc_id"] for r in docs_df.select("doc_id").collect()]
-    victims = [d for d in cands
-               if affected_buckets(spark, [d], BUCKETS)[0] not in done][:3]
+    by_bucket = bucket_of_ids(spark, cands, BUCKETS)
+    victims = sorted(d for b, ids in by_bucket.items() if b not in done
+                     for d in ids)[:3]
     assert len(victims) == 3
 
     n_rewritten = delete_docs(spark, store, victims, root)
