@@ -34,17 +34,22 @@ Re-running an already-committed batch id is idempotent: subclasses
 detect the existing ``_SUCCESS`` and replay against exactly the index
 state the batch saw the first time (``Batch.prior``, the batches
 committed strictly before its own seq).
+
+The file-level rules under this discipline (the pinned ``_meta.json``,
+whole-or-absent ``_seq.json``, the staged-directory publish, pinned
+reads) are streaming/commit.py's, shared with the checkpoint store.
 """
 from __future__ import annotations
 
-import json
 import os
 from typing import Callable, Dict, List, NamedTuple, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
 
-from ..streaming.store import footer_schema, parquet_files
+from ..streaming.commit import (ASIDE, footer_schema, parquet_files,
+                                pin_meta, publish, read_json, read_parquet,
+                                write_json)
 
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
@@ -84,26 +89,9 @@ class AtomicBatchIndex:
         self.staging_dir = os.path.join(root, "_staging")
         for d in (self.index_dir, self.staging_dir):
             os.makedirs(d, exist_ok=True)
-        meta_path = os.path.join(root, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            fmt = meta.get("format", 1)   # pre-versioning indexes are v1
-            if fmt != self.FORMAT:
-                raise ValueError(
-                    f"index at {root} has on-disk format v{fmt}; this code "
-                    f"writes v{self.FORMAT}. Rebuild the index — appending "
-                    "would silently produce un-joinable rows.")
-            for key, val in params.items():
-                if meta.get(key) != val:
-                    raise ValueError(
-                        f"index at {root} was built with {key}="
-                        f"{meta.get(key)!r}; cannot append with {key}={val!r}")
-        else:
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({**params, "format": self.FORMAT}, f)
-            os.rename(tmp, meta_path)
+        # pre-versioning indexes are v1; a format change means rebuild
+        pin_meta(root, {**params, "format": self.FORMAT},
+                 ["format", *params], "index", "append", {"format": 1})
         self.params = dict(params)
         self._schema = None
 
@@ -146,20 +134,21 @@ class AtomicBatchIndex:
     def _read(self, spark: SparkSession, paths: List[str]) -> DataFrame:
         if not paths:
             return spark.createDataFrame([], self.row_schema())
-        return spark.read.schema(self.row_schema()).parquet(*paths)
+        return read_parquet(spark, paths, self.row_schema())
 
     # -- committed listing -----------------------------------------------
 
     def _batch_seq(self, name: str) -> int:
-        with open(os.path.join(self.index_dir, name, "_seq.json")) as f:
-            return json.load(f)["seq"]
+        return read_json(os.path.join(self.index_dir, name,
+                                      "_seq.json"))["seq"]
 
     def _committed(self) -> List[Tuple[str, int]]:
         """(name, seq) of every committed batch in COMMIT order: one
-        directory listing and one ``_seq.json`` read per batch."""
+        directory listing and one ``_seq.json`` read per batch (a
+        publish aside is not a batch)."""
         done = [(d, self._batch_seq(d)) for d in os.listdir(self.index_dir)
-                if os.path.exists(os.path.join(self.index_dir, d,
-                                               "_SUCCESS"))]
+                if not d.endswith(ASIDE) and os.path.exists(
+                    os.path.join(self.index_dir, d, "_SUCCESS"))]
         return sorted(done, key=lambda ds: ds[1])
 
     def committed_batches(self) -> List[str]:
@@ -179,25 +168,9 @@ class AtomicBatchIndex:
         return self._read(spark, [os.path.join(self.index_dir, d)
                                   for d in batch.prior])
 
-    def _next_seq(self) -> int:
-        return 1 + max((s for _, s in self._committed()), default=0)
-
-    def _stage_paths(self, batch_id: str):
-        return (os.path.join(self.staging_dir, batch_id),
-                os.path.join(self.index_dir, batch_id))
-
     def _is_committed(self, batch_id: str) -> bool:
         return os.path.exists(
             os.path.join(self.index_dir, batch_id, "_SUCCESS"))
-
-    def _stamp_seq(self, stage: str, seq: int) -> None:
-        with open(os.path.join(stage, "_seq.json"), "w") as f:
-            json.dump({"seq": seq}, f)
-
-    def _commit(self, stage: str, final: str) -> None:
-        import shutil
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
 
     # -- shared append skeleton ------------------------------------------
     # Every incremental index follows the same prologue/epilogue around
@@ -214,7 +187,8 @@ class AtomicBatchIndex:
         the seq they were stamped with."""
         committed = self._committed()
         seqs = dict(committed)
-        stage, final = self._stage_paths(batch_id)
+        stage = os.path.join(self.staging_dir, batch_id)
+        final = os.path.join(self.index_dir, batch_id)
         replay = batch_id in seqs
         if replay:
             src, seq = final, seqs[batch_id]
@@ -222,7 +196,7 @@ class AtomicBatchIndex:
             self._write_rows(build_fn(), stage, first=not committed)
             src = stage
             seq = 1 + max(seqs.values(), default=0)
-            self._stamp_seq(stage, seq)
+            write_json(os.path.join(stage, "_seq.json"), {"seq": seq})
         return Batch(self._read(spark, [src]), replay, stage, final,
                      [d for d, s in committed if s < seq])
 
@@ -232,5 +206,5 @@ class AtomicBatchIndex:
         commit (no-op on replay)."""
         out = result_df.localCheckpoint()
         if not batch.replay:
-            self._commit(batch.stage, batch.final)
+            publish(batch.stage, batch.final)
         return out

@@ -126,6 +126,27 @@ def _verify(pairs: DataFrame, jaccard_min: float) -> DataFrame:
                     "jaccard"))
 
 
+def first_seen_losers(pairs: DataFrame, batch_ids: DataFrame) -> DataFrame:
+    """The doc_ids the streaming keep rule (greedy first-seen-wins) drops
+    from a batch, given the batch's ``doc_id``s and its near-dup
+    ``pairs`` from ``SketchIndex.append_and_find`` (canonical doc_a <
+    doc_b): of a pair inside the batch, doc_b (the larger id); of a
+    pair with one side in the batch, the batch side (the earlier doc
+    wins)."""
+    b_a = batch_ids.withColumnRenamed("doc_id", "doc_a")
+    b_b = batch_ids.withColumnRenamed("doc_id", "doc_b")
+    both_b = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
+              .join(F.broadcast(b_b), "doc_b", "left_semi")
+              .select(F.col("doc_b").alias("doc_id")))
+    cross_a = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
+               .join(F.broadcast(b_b), "doc_b", "left_anti")
+               .select(F.col("doc_a").alias("doc_id")))
+    cross_b = (pairs.join(F.broadcast(b_b), "doc_b", "left_semi")
+               .join(F.broadcast(b_a), "doc_a", "left_anti")
+               .select(F.col("doc_b").alias("doc_id")))
+    return both_b.unionByName(cross_a).unionByName(cross_b).distinct()
+
+
 class SketchIndex(AtomicBatchIndex):
     """Persisted banded-MinHash index with atomic batch commits.
 

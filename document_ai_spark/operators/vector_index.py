@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..streaming.commit import publish
 from .batch_index import AtomicBatchIndex
 from .similarity import (
     EMB_LSH_BANDS,
@@ -76,16 +77,13 @@ class CodebookIndex(AtomicBatchIndex):
 
     def ensure(self, spark: SparkSession, emb: DataFrame) -> DataFrame:
         """The committed codebook, training it from ``emb`` only if this
-        index has none yet. Idempotent: concurrent/replayed ensure()
-        calls re-train into staging and atomically re-commit the same
-        deterministic result."""
+        index has none yet, as the index's one batch (stage, stamp,
+        publish; a replay of a committed codebook trains nothing)."""
         if not self.is_trained():
-            stage, final = self._stage_paths(self._BATCH)
-            self._write_rows(kmeans_codebook(emb, self.k, self.iters,
-                                             self.sample_mod), stage,
-                             first=True)
-            self._stamp_seq(stage, self._next_seq())
-            self._commit(stage, final)
+            b = self._open_batch(spark, self._BATCH, lambda: kmeans_codebook(
+                emb, self.k, self.iters, self.sample_mod))
+            if not b.replay:
+                publish(b.stage, b.final)
         return self.centroids(spark)
 
 

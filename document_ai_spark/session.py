@@ -1,8 +1,10 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
 AQE on (runtime shuffle coalescing + skew-join splitting), Arrow exchange
-on (all our UDFs are Arrow-vectorized), shuffle partitions sized for the
-local[32] sandbox but overridable for real clusters.
+on (all our UDFs are Arrow-vectorized). The master is Spark's choice
+unless a caller names one: spark-submit's ``--master``, or ``local[*]``
+under plain ``python``. The tuning constants below are defaults that
+``shuffle_partitions=`` and ``extra_conf=`` override.
 """
 from __future__ import annotations
 
@@ -10,7 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # Post-shuffle partition sizing (round 6, optimization guide §2.2).
 # The engine's operators are CPU-dense per row (tokenize + md5 + HOF
@@ -23,24 +25,25 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 # only coalesces DOWN toward it — it never splits big shuffles, it
 # only stops byte-based coalescing from starving compute-dense stages
 # (the same reasoning bench.py's _SCALING_CONF documents for the
-# extraction legs). Production overrides via env. NOTE on scans: the
+# extraction legs). Override with extra_conf. NOTE on scans: the
 # bench tables are single-row-group parquet files, so
 # files.maxPartitionBytes cannot parallelize them (measured: 6 splits
 # = 5 empty tasks, zero speedup) — map-side parallelism for expensive
 # per-row work comes from session.fan_out / compute-above-sort query
 # shapes instead, which stay no-ops on real multi-split inputs.
-ADVISORY_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_ADVISORY", "1m")
-MIN_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MIN_PARTITION", "256k")
+ADVISORY_PARTITION_BYTES = "1m"
+MIN_PARTITION_BYTES = "256k"
 
 
 def get_spark(app_name: str = "document_ai_spark",
               master: str | None = None,
               shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -49,6 +49,10 @@ still-staged bucket without re-extracting it only if its current
 tombstones (and the salt) equal the recorded ones; a ``delete_docs`` in
 between forces a recompute of that bucket.
 
+The file-level commit rules (the pinned ``_meta.json``, whole-or-absent
+JSON records, directory publish, schema-pinned reads) live in commit.py;
+the bucket commit protocol on top of them is ManifestStore's (store.py).
+
 The reference analog is the batch-job progress dict + per-file error
 capture (reference backend/main.py:522-562) and the WorkflowState
 reasoning log (backend/services/coordinator.py:19-29) — there, in-memory
@@ -65,6 +69,7 @@ from typing import Callable, Dict, Iterable, List, Optional
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructType
 
+from .commit import META, pin_meta, read_json, read_parquet, write_json
 from .store import (  # noqa: F401  (re-exported public surface)
     IcebergStore,
     IcebergUnavailable,
@@ -132,7 +137,7 @@ class _BucketedInput:
         """The given buckets' docs, less the tombstoned ids (docs deleted
         while their bucket was uncommitted: the ingested input still
         holds them, and reading them would resurrect them)."""
-        df = (self.spark.read.schema(self.schema()).parquet(self.path)
+        df = (read_parquet(self.spark, [self.path], self.schema())
               .where(F.col("bucket").isin(buckets)))
         if tombstones:
             df = df.where(~F.col("doc_id").isin(tombstones))
@@ -170,30 +175,6 @@ class _BucketedInput:
             waves[-1].append(b)
             size += nb
         return waves
-
-
-def _read_meta(out_root: str, buckets: int, run_id: str) -> dict:
-    """The run root's ``_meta.json``, created on first use. The bucket
-    count defines the doc->partition assignment; resuming with a
-    different count would skip the wrong slices, so it is pinned."""
-    os.makedirs(out_root, exist_ok=True)
-    path = os.path.join(out_root, "_meta.json")
-    if not os.path.exists(path):
-        _write_meta(out_root, {"buckets": buckets, "run_id": run_id})
-    with open(path) as f:
-        meta = json.load(f)
-    if meta["buckets"] != buckets:
-        raise ValueError(
-            f"store at {out_root} was created with buckets="
-            f"{meta['buckets']}; cannot resume with buckets={buckets}")
-    return meta
-
-
-def _write_meta(out_root: str, meta: dict) -> None:
-    path = os.path.join(out_root, "_meta.json")
-    with open(path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.rename(path + ".tmp", path)
 
 
 def run_checkpointed(
@@ -236,7 +217,10 @@ def run_checkpointed(
     from ..plans.pipeline import extract as default_extract
 
     store = store or ManifestStore(out_root)
-    meta = _read_meta(out_root, buckets, run_id)
+    # The bucket count defines the doc->partition assignment; resuming
+    # with a different count would skip the wrong slices, so it is pinned.
+    meta = pin_meta(out_root, {"buckets": buckets, "run_id": run_id},
+                    ["buckets"], "store", "resume")
 
     if docs_path is None:
         docs_path = os.path.join(out_root, "_input")
@@ -266,8 +250,8 @@ def run_checkpointed(
         if "salt_buckets" not in meta:
             from ..plans.pipeline import derive_salt_buckets
             meta["salt_buckets"] = derive_salt_buckets(
-                spark.read.schema(inp.schema()).parquet(docs_path))
-            _write_meta(out_root, meta)
+                read_parquet(spark, [docs_path], inp.schema()))
+            write_json(os.path.join(out_root, META), meta)
         k_salt = meta["salt_buckets"]
 
         def fn(d, p):
@@ -386,7 +370,5 @@ def delete_docs(spark: SparkSession, store: SnapshotStore,
     main.py:695-705) against a checkpointed store: rewrites only the
     buckets the ids hash into and commits each as a new snapshot.
     Returns the number of buckets rewritten."""
-    meta_path = os.path.join(out_root, "_meta.json")
-    with open(meta_path) as f:
-        buckets = json.load(f)["buckets"]
+    buckets = read_json(os.path.join(out_root, META))["buckets"]
     return store.delete_docs(spark, doc_ids, buckets)

@@ -10,6 +10,13 @@ backend/services/agentic_ai.py:88-101, 404-475). Here:
   * incremental ingest is Structured Streaming over the interleaved-doc
     directory with the SAME extraction pipeline applied per micro-batch
     via foreachBatch — batch/stream parity by construction.
+
+Every ``stream_*`` twin runs on one micro-batch driver (``_micro_batches``)
+and supplies only its per-batch body. Exactly-once across restarts is
+the driver's per-batch output overwrite plus, for the twins that keep
+a persisted index, the index's idempotent replay of a batch id; the
+index commit rules live in operators/batch_index.py and
+streaming/commit.py.
 """
 from __future__ import annotations
 
@@ -60,6 +67,31 @@ def similar_feedback(feedback: DataFrame, doc_type: str,
     )
 
 
+def _micro_batches(spark: SparkSession, in_dir: str, schema, out_dir: str,
+                   checkpoint_dir: str, body):
+    """Stream the parquet files of ``in_dir`` (read with ``schema``, 4
+    files per trigger) until none is left, writing each non-empty
+    micro-batch's ``body(batch_df, batch_id)`` frame over
+    ``out_dir/batch=<id>/``: a foreachBatch replay after a crash
+    (checkpoint not yet committed) rewrites the same directory instead
+    of appending duplicate rows. Returns the StreamingQuery."""
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            body(batch_df, batch_id).write.mode("overwrite").parquet(
+                f"{out_dir}/batch={batch_id}")
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(in_dir)
+        .writeStream
+        .foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_dedup(spark: SparkSession, in_dir: str, index_root: str,
                  pairs_dir: str, checkpoint_dir: str,
                  jaccard_min: float = 0.5):
@@ -69,35 +101,16 @@ def stream_dedup(spark: SparkSession, in_dir: str, index_root: str,
     ``pairs_dir/batch=<id>/``, and its sketches are committed to the
     index for the next batch (operators/sketch_index.py).
 
-    Exactly-once across restarts: foreachBatch replays a batch with the
-    SAME batch_id, append_and_find is idempotent per batch_id, and the
-    per-batch output directory is overwritten, not appended. Returns the
-    StreamingQuery."""
+    Exactly-once across restarts: append_and_find is idempotent per
+    batch_id (see _micro_batches). Returns the StreamingQuery."""
     from ..operators.sketch_index import SketchIndex
 
     idx = SketchIndex(index_root)
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = idx.append_and_find(
-            spark, batch_df.select("doc_id", "text"),
-            batch_id=f"stream-{batch_id}", jaccard_min=jaccard_min)
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch={batch_id}")
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(
+        spark, in_dir, "doc_id string, text string", pairs_dir,
+        checkpoint_dir, lambda df, i: idx.append_and_find(
+            spark, df.select("doc_id", "text"), batch_id=f"stream-{i}",
+            jaccard_min=jaccard_min))
 
 
 def stream_containment(spark: SparkSession, in_dir: str, index_root: str,
@@ -115,66 +128,29 @@ def stream_containment(spark: SparkSession, in_dir: str, index_root: str,
     from ..operators.winnow_index import WinnowIndex
 
     idx = WinnowIndex(index_root)
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = idx.append_and_find(
-            spark, batch_df.select("doc_id", "text"),
-            batch_id=f"stream-{batch_id}",
-            containment_min=containment_min, min_shared=min_shared)
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch={batch_id}")
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(
+        spark, in_dir, "doc_id string, text string", pairs_dir,
+        checkpoint_dir, lambda df, i: idx.append_and_find(
+            spark, df.select("doc_id", "text"), batch_id=f"stream-{i}",
+            containment_min=containment_min, min_shared=min_shared))
 
 
 def stream_extract(spark: SparkSession, in_dir: str, out_dir: str,
                    checkpoint_dir: str, payloads_df: DataFrame):
     """Structured Streaming ingest: watch in_dir for new interleaved-doc
     parquet files, run the SAME batch pipeline per micro-batch. Output
-    lands under ``out_dir/batch=<id>/`` with per-batch OVERWRITE — a
-    foreachBatch replay after a crash (checkpoint not yet committed)
-    rewrites the same directory instead of appending duplicate rows,
-    the exactly-once discipline every streaming twin here follows.
-    Returns the StreamingQuery (caller awaits/stops)."""
+    lands under ``out_dir/batch=<id>/`` with per-batch OVERWRITE (see
+    _micro_batches). Returns the StreamingQuery (caller awaits/stops)."""
     from ..plans.pipeline import extract
     from ..sources.docgen import interleaved_schema
 
-    stream = (
-        spark.readStream.schema(interleaved_schema())
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # micro-batches are small (maxFilesPerTrigger) — pin the
-        # reassembly salt instead of paying derive_salt_buckets'
-        # approxQuantile action on every batch
-        out = extract(batch_df, payloads_df, salt_buckets=8).withColumn(
-            "out_spans", F.to_json("out_spans"))
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # micro-batches are small (maxFilesPerTrigger) — pin the reassembly
+    # salt instead of paying derive_salt_buckets' approxQuantile action
+    # on every batch
+    return _micro_batches(
+        spark, in_dir, interleaved_schema(), out_dir, checkpoint_dir,
+        lambda df, i: extract(df, payloads_df, salt_buckets=8).withColumn(
+            "out_spans", F.to_json("out_spans")))
 
 
 def stream_curate(spark: SparkSession, in_dir: str, index_root: str,
@@ -201,20 +177,12 @@ def stream_curate(spark: SparkSession, in_dir: str, index_root: str,
     batch's survivors land in an overwritten per-batch directory.
     Returns the StreamingQuery; read ``out_dir`` afterwards for the kept
     corpus (token_budget over it gives the running training budget)."""
-    from ..operators.sketch_index import SketchIndex
+    from ..operators.sketch_index import SketchIndex, first_seen_losers
     from ..operators.textquality import with_quality_score
 
     idx = SketchIndex(index_root)
-    stream = (
-        spark.readStream
-        .schema("doc_id string, text string, lang string, source string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def curate_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         src = batch_df
         if c4:
             # Stateless map — streaming-safe by construction; the index
@@ -254,32 +222,13 @@ def stream_curate(spark: SparkSession, in_dir: str, index_root: str,
         pairs = idx.append_and_find(
             spark, gated.select("doc_id", "text"),
             batch_id=f"curate-{batch_id}", jaccard_min=jaccard_min)
-        b = gated.select("doc_id")
-        b_a = b.withColumnRenamed("doc_id", "doc_a")
-        b_b = b.withColumnRenamed("doc_id", "doc_b")
-        # pairs are canonical doc_a < doc_b. Losers:
-        #   both in batch      -> doc_b (larger id)
-        #   one side in batch  -> the batch side (the earlier doc wins)
-        both_b = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
-                  .join(F.broadcast(b_b), "doc_b", "left_semi")
-                  .select(F.col("doc_b").alias("doc_id")))
-        cross_a = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
-                   .join(F.broadcast(b_b), "doc_b", "left_anti")
-                   .select(F.col("doc_a").alias("doc_id")))
-        cross_b = (pairs.join(F.broadcast(b_b), "doc_b", "left_semi")
-                   .join(F.broadcast(b_a), "doc_a", "left_anti")
-                   .select(F.col("doc_b").alias("doc_id")))
-        losers = both_b.unionByName(cross_a).unionByName(cross_b).distinct()
-        kept = gated.join(losers, "doc_id", "left_anti")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        return gated.join(first_seen_losers(pairs, gated.select("doc_id")),
+                          "doc_id", "left_anti")
 
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(
+        spark, in_dir,
+        "doc_id string, text string, lang string, source string",
+        out_dir, checkpoint_dir, curate_batch)
 
 
 def stream_embed_dedup(spark: SparkSession, in_dir: str, index_root: str,
@@ -292,36 +241,16 @@ def stream_embed_dedup(spark: SparkSession, in_dir: str, index_root: str,
     ``pairs_dir/batch=<id>/``, and its banded rows are committed to the
     index for the next batch (operators/vector_index.py EmbeddingIndex).
 
-    Exactly-once across restarts: foreachBatch replays a batch with the
-    SAME batch_id, append_and_find is idempotent per batch_id, and the
-    per-batch output directory is overwritten, not appended. Returns the
-    StreamingQuery."""
+    Exactly-once across restarts: append_and_find is idempotent per
+    batch_id (see _micro_batches). Returns the StreamingQuery."""
     from ..operators.vector_index import EmbeddingIndex
 
     idx = EmbeddingIndex(index_root)
-    stream = (
-        spark.readStream
-        .schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = idx.append_and_find(
-            spark, batch_df.select("vec_id", "embedding"),
-            batch_id=f"stream-{batch_id}", cos_min=cos_min)
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch={batch_id}")
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(
+        spark, in_dir, "vec_id bigint, embedding array<float>", pairs_dir,
+        checkpoint_dir, lambda df, i: idx.append_and_find(
+            spark, df.select("vec_id", "embedding"), batch_id=f"stream-{i}",
+            cos_min=cos_min))
 
 
 def stream_line_dedup(spark: SparkSession, in_dir: str, index_root: str,
@@ -334,35 +263,16 @@ def stream_line_dedup(spark: SparkSession, in_dir: str, index_root: str,
     under ``out_dir/batch=<id>/``, and its per-line aggregate is
     committed to the index for the next batch.
 
-    Exactly-once across restarts: foreachBatch replays a batch with the
-    SAME batch_id, append_and_strip is idempotent per batch_id
-    (before_seq replay), and the per-batch output directory is
-    overwritten, not appended. Returns the StreamingQuery."""
+    Exactly-once across restarts: append_and_strip is idempotent per
+    batch_id (before_seq replay; see _micro_batches). Returns the
+    StreamingQuery."""
     from ..operators.line_index import LineIndex
 
     idx = LineIndex(index_root, min_docs=min_docs)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cleaned = idx.append_and_strip(
-            spark, batch_df.select("doc_id", "text"),
-            batch_id=f"stream-{batch_id}")
-        cleaned.write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}")
-
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(
+        spark, in_dir, "doc_id long, text string", out_dir, checkpoint_dir,
+        lambda df, i: idx.append_and_strip(
+            spark, df.select("doc_id", "text"), batch_id=f"stream-{i}"))
 
 
 def stream_span_filter(spark: SparkSession, in_dir: str, index_root: str,
@@ -379,37 +289,23 @@ def stream_span_filter(spark: SparkSession, in_dir: str, index_root: str,
     With ``max_frac`` set, rows scoring above it are dropped instead of
     emitted (the streaming form of run_curate's --dup-span-max).
 
-    Exactly-once across restarts: foreachBatch replays a batch with the
-    SAME batch_id, append_and_score is idempotent per batch_id
-    (before_seq replay), and the per-batch output directory is
-    overwritten, not appended. Returns the StreamingQuery."""
+    Exactly-once across restarts: append_and_score is idempotent per
+    batch_id (before_seq replay; see _micro_batches). Returns the
+    StreamingQuery."""
     from ..operators.span_index import SpanIndex
 
     idx = SpanIndex(index_root, w=w, min_docs=min_docs)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         scored = idx.append_and_score(
             spark, batch_df.select("doc_id", "text"),
             batch_id=f"stream-{batch_id}")
         if max_frac is not None:
             scored = scored.where(F.col("dup_span_frac") <= max_frac)
-        scored.write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}")
+        return scored
 
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(spark, in_dir, "doc_id long, text string",
+                          out_dir, checkpoint_dir, score_batch)
 
 
 def stream_decontaminate(spark: SparkSession, in_dir: str, eval_path: str,
@@ -463,15 +359,7 @@ def stream_decontaminate(spark: SparkSession, in_dir: str, eval_path: str,
         bloom_df = bloom_bitmap_df(
             bloom_texts, "_etext", m_bits=bloom_mbits).cache()
 
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def filter_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         hits = (batch_df.select(
             "doc_id", F.explode(_word_shingles(ngram)).alias("ngram"))
             .join(block, "ngram").select("doc_id").distinct())
@@ -486,12 +374,7 @@ def stream_decontaminate(spark: SparkSession, in_dir: str, eval_path: str,
                 kept.select("doc_id", "text"), eval_docs,
                 jaccard_min=fuzzy_jaccard, bands=bands, rows=rows)
             kept = kept.join(fh.select("doc_id"), "doc_id", "left_anti")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        return kept
 
-    return (
-        stream.writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _micro_batches(spark, in_dir, "doc_id string, text string",
+                          out_dir, checkpoint_dir, filter_batch)

@@ -23,12 +23,17 @@ A store whose ``supports_waves`` is true also stages a whole wave of
 buckets in one write (``write_bucket`` with a tuple of buckets) and
 keeps a sealed wave's staged buckets across a crash (``seal_wave`` /
 ``sealed_waves`` / ``staged_files``).
+
+ManifestStore's file-level commit rules (whole-or-absent JSON records,
+the aside swap of a bucket directory, schema-pinned reads) live in
+commit.py, shared with the persisted operator indexes; the parquet
+footer helpers are re-exported from there.
 """
 from __future__ import annotations
 
 import abc
-import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import (Any, Dict, Iterable, List, NamedTuple, Optional,
@@ -36,10 +41,18 @@ from typing import (Any, Dict, Iterable, List, NamedTuple, Optional,
 
 from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
                          functions as F)
-from pyspark.sql.types import StructType
 
-# footer key under which Spark's parquet writer stores the row schema
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+from .commit import (  # noqa: F401  (footer helpers, re-exported)
+    column_sum,
+    footer_rows,
+    footer_schema,
+    parquet_files,
+    publish,
+    read_json,
+    read_parquet,
+    write_json,
+)
+
 WAVE_RECORD = "_wave.json"
 
 
@@ -68,41 +81,6 @@ class Lineage:
 _LINEAGE_SCHEMA = ("run_id string, partition_id int, snapshot_id string, "
                    "rows_in long, rows_out long, latency_ms double, "
                    "committed_at string, seq long, metrics string")
-
-
-def parquet_files(directory: str) -> List[str]:
-    """The data files of one parquet directory (no hidden, ``_`` or
-    checksum files), sorted; empty when the directory does not exist."""
-    if not os.path.isdir(directory):
-        return []
-    return sorted(os.path.join(directory, f) for f in os.listdir(directory)
-                  if f.endswith(".parquet") and not f.startswith((".", "_")))
-
-
-def footer_schema(path: str) -> StructType:
-    """The Spark row schema a parquet file was written with, read from
-    its footer with pyarrow (no Spark job)."""
-    import pyarrow.parquet as pq
-    kv = pq.read_schema(path).metadata
-    return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
-
-
-def footer_rows(files: Iterable[str]) -> int:
-    """Rows in the given parquet files, from their footers."""
-    import pyarrow.parquet as pq
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def column_sum(files: Iterable[str], column: str) -> int:
-    """Sum of one integer column over the given parquet files, read
-    with pyarrow (NULLs count as 0, as in SQL's sum)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    total = 0
-    for f in files:
-        s = pc.sum(pq.read_table(f, columns=[column])[column]).as_py()
-        total += int(s or 0)
-    return total
 
 
 def bucket_expr(buckets: int) -> Column:
@@ -290,8 +268,7 @@ class ManifestStore(SnapshotStore):
             # or fabricate a commit record — both violate the
             # manifests-are-created-whole contract.
             if name.endswith(".json") and not name.startswith("."):
-                with open(os.path.join(self.manifest_dir, name)) as f:
-                    m = json.load(f)
+                m = read_json(os.path.join(self.manifest_dir, name))
                 out[int(m["partition_id"])] = m
         return out
 
@@ -302,15 +279,8 @@ class ManifestStore(SnapshotStore):
 
     def _seq(self) -> int:
         if os.path.exists(self._seq_path()):
-            with open(self._seq_path()) as f:
-                return json.load(f)["seq"]
+            return read_json(self._seq_path())["seq"]
         return len(self.committed_buckets())
-
-    def _write_seq(self, seq: int) -> None:
-        tmp = self._seq_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"seq": seq}, f)
-        os.rename(tmp, self._seq_path())
 
     def snapshot_id(self) -> str:
         """Monotone commit counter — advances on every commit, including
@@ -344,7 +314,6 @@ class ManifestStore(SnapshotStore):
             out_df.write.mode("overwrite").parquet(path)
             self._staged[bucket] = path
             return footer_rows(parquet_files(path))
-        import shutil
         # Unsealed waves are leftovers of wave jobs that crashed: never
         # reused, so drop them before staging the next one.
         for wave in self._wave_dirs():
@@ -379,11 +348,9 @@ class ManifestStore(SnapshotStore):
         caller-defined entry per bucket (what the staged copy was
         computed from, and its counts)."""
         wave = os.path.dirname(self._staged[next(iter(entries))])
-        tmp = os.path.join(wave, "." + WAVE_RECORD)
-        with open(tmp, "w") as f:
-            json.dump({"buckets": {str(b): e for b, e in entries.items()}},
-                      f, sort_keys=True)
-        os.rename(tmp, os.path.join(wave, WAVE_RECORD))
+        write_json(os.path.join(wave, WAVE_RECORD),
+                   {"buckets": {str(b): e for b, e in entries.items()}},
+                   sort_keys=True)
 
     def sealed_waves(self) -> Dict[int, dict]:
         """{bucket: entry} for every bucket still staged by a sealed
@@ -394,9 +361,7 @@ class ManifestStore(SnapshotStore):
             rec = os.path.join(wave, WAVE_RECORD)
             if not os.path.exists(rec):
                 continue
-            with open(rec) as f:
-                entries = json.load(f)["buckets"]
-            for b, entry in entries.items():
+            for b, entry in read_json(rec)["buckets"].items():
                 path = os.path.join(wave, f"bucket={b}")
                 if os.path.isdir(path):
                     out[int(b)] = entry
@@ -406,7 +371,6 @@ class ManifestStore(SnapshotStore):
     def _sweep_waves(self, bucket: int) -> None:
         """After ``bucket`` committed: drop stale staged copies of it in
         older waves, then every sealed wave with no bucket left."""
-        import shutil
         for wave in self._wave_dirs():
             shutil.rmtree(os.path.join(wave, f"bucket={bucket}"),
                           ignore_errors=True)
@@ -428,14 +392,14 @@ class ManifestStore(SnapshotStore):
              so a crash inside it means redo, never a manifest pointing
              at missing/half-swapped data (the old rmtree-before-rename
              left exactly that: manifest committed, directory gone);
-          3. old data renamed ASIDE (bucket=<b>.old), new renamed in,
-             aside deleted — no point where the committed path is
-             missing while a manifest references it;
-          4. manifest written whole + renamed (atomic publish).
-        A leftover .old directory is swept on the next commit of the
-        same bucket; .old paths are never read (reads go through
-        committed_path only)."""
-        import shutil
+          3. the staged directory replaces the committed one through
+             commit.publish (old renamed aside to bucket=<b>.old, new
+             renamed in, aside deleted; a leftover aside is swept) — no
+             point where the committed path is missing while a manifest
+             references it;
+          4. manifest written whole (commit.write_json: atomic publish).
+        .old paths are never read (reads go through committed_path
+        only)."""
         seq_next = self._seq() + 1
         lineage.seq = seq_next       # monotone 'latest commit wins' key
         # The id of the snapshot that CONTAINS this commit (the counter
@@ -443,33 +407,15 @@ class ManifestStore(SnapshotStore):
         # post-write table snapshot; recording the pre-commit id was
         # off by one (review finding).
         lineage.snapshot_id = f"snap-{seq_next:06d}"
-        self._write_seq(seq_next)
-        src = self._staged.pop(lineage.partition_id,
-                               self.staged_path(lineage.partition_id))
-        dst = self.committed_path(lineage.partition_id)
+        write_json(self._seq_path(), {"seq": seq_next})
         man = os.path.join(self.manifest_dir,
                            f"{lineage.partition_id}.json")
         if os.path.exists(man):
             os.remove(man)
-        # Sweep a leftover aside UNCONDITIONALLY (round-6 ADVICE): a
-        # crash between rename(dst, aside) and rename(src, dst) leaves
-        # dst absent and the aside behind, and the recovery re-commit
-        # takes the not-exists(dst) branch — which previously never
-        # swept it, leaking the directory until some later commit
-        # happened to find dst present.
-        shutil.rmtree(dst + ".old", ignore_errors=True)
-        if os.path.exists(dst):
-            aside = dst + ".old"
-            os.rename(dst, aside)
-            os.rename(src, dst)
-            shutil.rmtree(aside, ignore_errors=True)
-        else:
-            os.rename(src, dst)
-        tmp = os.path.join(self.manifest_dir,
-                           f".tmp-{lineage.partition_id}.json")
-        with open(tmp, "w") as f:
-            json.dump(lineage.__dict__, f)
-        os.rename(tmp, man)
+        publish(self._staged.pop(lineage.partition_id,
+                                 self.staged_path(lineage.partition_id)),
+                self.committed_path(lineage.partition_id))
+        write_json(man, lineage.__dict__)
         self._sweep_waves(lineage.partition_id)
 
     # -- tombstones -----------------------------------------------------------
@@ -479,17 +425,11 @@ class ManifestStore(SnapshotStore):
 
     def pending_tombstones(self, bucket: int) -> List[str]:
         p = self._tombstone_path(bucket)
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return json.load(f)["doc_ids"]
+        return read_json(p)["doc_ids"] if os.path.exists(p) else []
 
     def _add_tombstones(self, bucket: int, doc_ids: List[str]) -> None:
         merged = sorted(set(self.pending_tombstones(bucket)) | set(doc_ids))
-        tmp = self._tombstone_path(bucket) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"doc_ids": merged}, f)
-        os.rename(tmp, self._tombstone_path(bucket))
+        write_json(self._tombstone_path(bucket), {"doc_ids": merged})
 
     def clear_tombstones(self, bucket: int) -> None:
         p = self._tombstone_path(bucket)
@@ -497,11 +437,12 @@ class ManifestStore(SnapshotStore):
             os.remove(p)
 
     def read_committed(self, spark: SparkSession) -> DataFrame:
-        """Union of all committed bucket outputs (the visible snapshot)."""
+        """Union of all committed bucket outputs (the visible snapshot),
+        schema-pinned from a footer: no Spark job."""
         paths = [self.committed_path(b) for b in self.committed_buckets()]
         if not paths:
             raise ValueError("no committed buckets")
-        return spark.read.parquet(*paths)
+        return read_parquet(spark, paths)
 
     # -- delete ---------------------------------------------------------------
 
@@ -522,7 +463,7 @@ class ManifestStore(SnapshotStore):
                 self._add_tombstones(b, b_ids)
                 continue
             t0 = time.monotonic()
-            cur = spark.read.parquet(self.committed_path(b))
+            cur = read_parquet(spark, [self.committed_path(b)])
             kept = cur.where(~F.col("doc_id").isin(b_ids))
             rows_out = self.write_bucket(b, kept)
             prev = done[b]

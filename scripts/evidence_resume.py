@@ -59,7 +59,7 @@ N_EXTRACT = 60_000 if QUICK else 600_000
 N_CURATE = 50_000 if QUICK else 500_000
 BUCKETS = 16
 KILL_AFTER = 5          # curation: SIGKILL once this many manifests exist
-THREADS = 32
+THREADS = len(os.sched_getaffinity(0))     # this host's cores
 POLL_S = 0.25
 
 
@@ -87,19 +87,11 @@ def dataset_hash(df) -> dict:
 
 def read_lineage(out_root: str) -> dict:
     """Per-bucket commit records, reduced to the run-invariant fields."""
-    mdir = os.path.join(out_root, "_manifests")
-    out = {}
-    for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            rec = json.load(f)
-        out[rec["partition_id"]] = {
-            "rows_in": rec["rows_in"],
-            "rows_out": rec["rows_out"],
-            "metrics": rec["metrics"],
-        }
-    return out
+    from document_ai_spark.streaming.store import ManifestStore
+    return {b: {"rows_in": rec["rows_in"], "rows_out": rec["rows_out"],
+                "metrics": rec["metrics"]}
+            for b, rec in sorted(
+                ManifestStore(out_root).committed_buckets().items())}
 
 
 def _launch(cmd: list) -> subprocess.Popen:
@@ -112,10 +104,11 @@ def _launch(cmd: list) -> subprocess.Popen:
 
 
 def _manifest_count(out_root: str) -> int:
-    mdir = os.path.join(out_root, "_manifests")
-    if not os.path.isdir(mdir):
+    """Committed buckets (a killed commit's temp is not one)."""
+    from document_ai_spark.streaming.store import ManifestStore
+    if not os.path.isdir(os.path.join(out_root, "_manifests")):
         return 0
-    return sum(1 for n in os.listdir(mdir) if n.endswith(".json"))
+    return len(ManifestStore(out_root).committed_buckets())
 
 
 def after_manifests(out_root: str):

@@ -291,7 +291,10 @@ def main() -> None:
         quality_gates,
         strip_hot_lines,
     )
-    from document_ai_spark.operators.sketch_index import SketchIndex
+    from document_ai_spark.operators.sketch_index import (
+        SketchIndex,
+        first_seen_losers,
+    )
     from document_ai_spark.operators.web import scrub_pii
     from document_ai_spark.operators.textquality import token_budget
     from document_ai_spark.session import get_spark
@@ -611,20 +614,9 @@ def main() -> None:
             spark, kept.select("doc_id", "text"),
             batch_id=f"{args.run_id}-b{bucket}",
             jaccard_min=args.jaccard_min)
-        ids = kept.select("doc_id")
-        b_a = ids.withColumnRenamed("doc_id", "doc_a")
-        b_b = ids.withColumnRenamed("doc_id", "doc_b")
-        both_b = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
-                  .join(F.broadcast(b_b), "doc_b", "left_semi")
-                  .select(F.col("doc_b").alias("doc_id")))
-        cross_a = (pairs.join(F.broadcast(b_a), "doc_a", "left_semi")
-                   .join(F.broadcast(b_b), "doc_b", "left_anti")
-                   .select(F.col("doc_a").alias("doc_id")))
-        cross_b = (pairs.join(F.broadcast(b_b), "doc_b", "left_semi")
-                   .join(F.broadcast(b_a), "doc_a", "left_anti")
-                   .select(F.col("doc_b").alias("doc_id")))
-        losers = both_b.unionByName(cross_a).unionByName(cross_b).distinct()
-        survivors = kept.join(losers, "doc_id", "left_anti")
+        survivors = kept.join(
+            first_seen_losers(pairs, kept.select("doc_id")), "doc_id",
+            "left_anti")
         if args.scrub_pii:
             # Last so the sketch index / hot-line table stay keyed on
             # original bytes — resumes and incremental probes of a

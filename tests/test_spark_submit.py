@@ -3,6 +3,7 @@
 and runs end-to-end (generate -> checkpointed extract -> range layout)."""
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 import zipfile
@@ -12,6 +13,25 @@ import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+
+
+@pytest.mark.skipif(not Path(SPARK_SUBMIT).exists(),
+                    reason="spark-submit not on this host")
+def test_spark_submit_master_reaches_get_spark(tmp_path):
+    """get_spark() without a master leaves it to spark-submit's
+    --master (SPARK_GRAFT_CPUS unset)."""
+    script = tmp_path / "master_probe.py"
+    script.write_text("from document_ai_spark.session import get_spark\n"
+                      "spark = get_spark('master-probe')\n"
+                      "print('MASTER', spark.sparkContext.master)\n")
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p)
+    proc = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[2]", str(script)],
+        capture_output=True, text=True, timeout=300, env=env)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "MASTER local[2]" in proc.stdout
 
 
 @pytest.mark.skipif(not Path(SPARK_SUBMIT).exists(),
